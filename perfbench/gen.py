@@ -11,9 +11,10 @@ Link graph model (one crawl-like web graph):
     of ``sources.pages.synth_pages``, applied per host;
   * the remaining links go across hosts by the same Zipf(1.6) law over
     a global popularity order, plus one site-wide portal link carried
-    by most pages, so one global in-hub exceeds the CSR chunk cap;
-  * one sitemap page links to a large share of the corpus, so one
-    out-hub exceeds the cap as well (PageRank's CSR is keyed by src);
+    by most pages: one global in-hub, above the engine's CSR chunk cap
+    once the corpus has ~90,000 pages;
+  * one sitemap page links to a large share of the corpus: one out-hub
+    (PageRank's CSR is keyed by src), above the cap at that size too;
   * ~16 outlink draws per page, ~5% dangling pages; repeated draws of
     the same target become the link multiplicity ``weight``, as
     ``extract_edges`` emits it.
@@ -29,7 +30,7 @@ import pyarrow.parquet as pq
 
 ZIPF_A = 1.6
 HOST_SIZE = 48
-CSR_CAP = 2048  # pinned engine chunk cap, below both hubs' degrees
+CSR_CAP = 65_536  # the engine's default CSR chunk cap (functions/graph.py)
 
 
 def link_graph(
@@ -41,7 +42,7 @@ def link_graph(
     dangling: float = 0.05,
     cross_host: float = 0.15,
     portal_share: float = 0.8,
-    sitemap_share: float = 0.5,
+    sitemap_share: float = 0.7,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Directed weighted link graph as (src, dst, weight) arrays.
 

@@ -1,7 +1,8 @@
 """Reference results the benchmark checks the engine's outputs against.
 
-All of them run outside the timed region: NumPy for PageRank, DuckDB for
-triangle counts.
+All of them run outside the timed region: NumPy for PageRank, LPA's
+fixpoint and modularity, DuckDB for triangle counts. Connected
+components come from ``gen.components_of``.
 """
 
 from __future__ import annotations
@@ -28,6 +29,45 @@ def pagerank(src, dst, w, damping: float = 0.85, tol: float = 1e-13):
         if delta <= tol:
             break
     return ids, p
+
+
+def lpa_unstable(src, dst, ids, labels) -> int:
+    """Vertices whose label is not a most frequent label among their
+    neighbours: the sticky-argmax fixpoint test of unit-vote LPA, which
+    hears each arc in both directions (so a mutual link votes twice)."""
+    lab = labels[np.searchsorted(ids, np.concatenate([src, dst]))]
+    ls, ld = lab[: src.size], lab[src.size:]
+    off = src != dst
+    listener = np.searchsorted(ids, np.concatenate([dst, src[off]]))
+    heard = np.concatenate([ls, ld[off]])
+    pair = listener.astype(np.int64) * (labels.max() + 1) + heard
+    uniq, cnt = np.unique(pair, return_counts=True)
+    who = uniq // (labels.max() + 1)
+    best = np.zeros(ids.size, np.int64)
+    np.maximum.at(best, who, cnt)
+    own = np.zeros(ids.size, np.int64)
+    mine = (uniq % (labels.max() + 1)) == labels[who]
+    own[who[mine]] = cnt[mine]
+    return int(np.count_nonzero(own < best))
+
+
+def modularity(src, dst, w, ids, labels) -> float:
+    """Undirected weighted Q = sum_c e_c/2m - (a_c/2m)^2 of the labelling
+    (ids sorted); arcs with an unlabelled end are left out, as the
+    engine's joins leave them out."""
+    ps, pd = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    ps, pd = np.minimum(ps, ids.size - 1), np.minimum(pd, ids.size - 1)
+    keep = (ids[ps] == src) & (ids[pd] == dst)
+    cs, cd, w = labels[ps[keep]], labels[pd[keep]], w[keep]
+    m = w.sum()
+    if m <= 0:
+        return 0.0
+    _, c = np.unique(np.concatenate([cs, cd]), return_inverse=True)
+    cs, cd = c[: cs.size], c[cs.size:]
+    e = np.bincount(cs[cs == cd], weights=2 * w[cs == cd], minlength=c.max() + 1)
+    a = np.bincount(cs, weights=w, minlength=c.max() + 1) \
+        + np.bincount(cd, weights=w, minlength=c.max() + 1)
+    return float((e / (2 * m)).sum() - ((a / (2 * m)) ** 2).sum())
 
 
 _TRIANGLES_SQL = """

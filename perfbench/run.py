@@ -1,18 +1,19 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload rank_resume --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload rank_resume --seed 1 --seconds 30 --trace 0
 
-Closed loop, one client, one job at a time: set-up (session start +
-seeded input generation, repeated ``SETUPS`` times), then the timed job
-back to back, as many times as fit ``--seconds`` at the workload's
-nominal job time (at least once; once at the benchmark's own setting).
-The job runs first in a fresh JVM, as a batch job submitted on its own
-does. A JVM keeps getting faster over its first jobs (rank_resume at
-8,000 pages: 28.5, 15.2, 14.9, 11.4 s), and a warm-up short enough for
-the run budget left the timed job somewhere on that curve. Every job's
-output is checked outside the timed region. The last stdout line is one JSON
-object: end-to-end metrics, or with ``--trace 1`` the per-layer metrics
-of one extra traced job run after the untraced ones.
+Closed loop, one client, one job at a time. Set-up is a session start in
+a fresh JVM plus seeded input generation; then one timed job runs, the
+first job of that JVM, as a batch job submitted on its own does. A JVM
+keeps getting faster over its first jobs (rank_resume at 8,000 pages:
+28.5, 15.2, 14.9, 11.4 s), so only a first job repeats from run to run.
+The job's output is checked outside the timed region. With ``--trace 1``
+a second, traced job follows in another fresh JVM. ``--seconds`` is
+accepted for the command-line contract; a run measures one job.
+
+The last stdout line is one JSON object: end-to-end metrics, or with
+``--trace 1`` the per-layer metrics of the traced job. ``attempted`` and
+``failed`` count operations (each operator call a workload checks).
 
 All scratch (Spark local dirs, warehouse, state, event log, inputs)
 lives under ``.perfbench_work/`` in the checkout and is removed on exit.
@@ -25,26 +26,23 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import sys
 import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
-SETUPS = 3
 DRIVER_MEM = "2g"
-# per-job values the workloads' checks report; printed as end-to-end
-# figures where a workload has them and emitted per layer when traced
+# per-job values the workloads' checks report; printed in the summary
+# where a workload has them and emitted per layer when traced
 COUNTERS = ("steady_edges_per_s", "resume_s", "runner.checkpoint_mb",
-            "pages.edges_out", "triangles.count")
+            "pages.edges_out", "triangles.count", "lpa.supersteps",
+            "lpa.full_gather_steps", "lpa.movers")
 
 
 def pin_env(work: str) -> dict[str, str]:
     """Fixed heap, all scratch under ``work``, no inherited engine knob
     (``SPARK_GRAFT_*``) left to change what is measured."""
-    from gen import CSR_CAP
-
     dirs = {k: os.path.join(work, k) for k in
             ("tmp", "local", "warehouse", "state", "events", "inputs")}
     for d in dirs.values():
@@ -58,7 +56,6 @@ def pin_env(work: str) -> dict[str, str]:
         SPARK_GRAFT_LOCAL_DIR=dirs["local"],
         SPARK_GRAFT_WAREHOUSE=dirs["warehouse"],
         SPARK_GRAFT_STATE_DIR=dirs["state"],
-        SPARK_GRAFT_CSR_CAP=str(CSR_CAP),
         SPARK_GRAFT_JAVA_OPTS=f"-XX:+UseParallelGC -XX:-UsePerfData "
                               f"-Djava.io.tmpdir={dirs['tmp']}",
     )
@@ -90,9 +87,9 @@ def stop_jvm() -> None:
     SparkContext._gateway = SparkContext._jvm = None
 
 
-def tree_cpu() -> float:
-    """CPU seconds of this process and all its descendants (JVM, Python
-    workers), including descendants that already exited and were reaped."""
+def _descendants() -> dict[int, tuple[str, int]]:
+    """This process and all its live descendants: pid -> (state, CPU
+    ticks including reaped children's)."""
     procs = {}
     for pid in os.listdir("/proc"):
         if not pid.isdigit():
@@ -102,12 +99,37 @@ def tree_cpu() -> float:
                 fields = f.read().rsplit(")", 1)[1].split()
         except OSError:
             continue
-        procs[int(pid)] = (int(fields[1]), sum(int(x) for x in fields[11:15]))
+        procs[int(pid)] = (int(fields[1]), fields[0], sum(int(x) for x in fields[11:15]))
     mine, frontier = set(), {os.getpid()}
     while frontier:
         mine |= frontier
-        frontier = {p for p, (ppid, _) in procs.items() if ppid in frontier} - mine
-    return sum(procs[p][1] for p in mine if p in procs) / os.sysconf("SC_CLK_TCK")
+        frontier = {p for p, (ppid, _, _) in procs.items() if ppid in frontier} - mine
+    return {p: procs[p][1:] for p in mine if p in procs}
+
+
+def tree_cpu() -> float:
+    """CPU seconds of this process and all its descendants (JVM, Python
+    workers), including descendants that already exited and were reaped."""
+    return sum(ticks for _, ticks in _descendants().values()) / os.sysconf("SC_CLK_TCK")
+
+
+def stop_descendants(timeout: float = 30.0) -> None:
+    """Terminate any process this one started that is still running,
+    such as a JVM whose session start was interrupted, and wait for it."""
+    deadline, sig = time.monotonic() + timeout, signal.SIGTERM
+    while True:
+        left = [p for p, (state, _) in _descendants().items()
+                if p != os.getpid() and state != "Z"]
+        if not left:
+            return
+        if time.monotonic() > deadline:
+            sig = signal.SIGKILL
+        for p in left:
+            try:
+                os.kill(p, sig)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.5)
 
 
 def purge(spark, dirs: dict) -> None:
@@ -128,57 +150,47 @@ def measure(wl, spark, tr, inp: dict, dirs: dict) -> dict:
     try:
         with tr.span("job"):
             out = wl.job(spark, tr, inp)
-        bad = []
+        bad = {}
     except Exception as e:  # a failed operation is counted, not fatal
-        bad = [f"{wl.name}: job raised {e!r}"]
+        bad = {op: [f"job raised {e!r}"] for op in wl.ops}
     job_s, cpu_s = time.perf_counter() - t0, tree_cpu() - cpu0
     counters = {}
     if not bad:
         try:
             bad, counters = wl.check(spark, inp, out)
         except Exception as e:
-            bad = [f"{wl.name}: check raised {e!r}"]
+            bad = {op: [f"check raised {e!r}"] for op in wl.ops}
     purge(spark, dirs)
     return {"job_s": job_s, "cpu_s": cpu_s, "bad": bad, "counters": counters}
 
 
-def traced_metrics(tr, stages, starts: list[float], traced: dict, timed: list[dict]) -> dict:
-    """Per-layer metrics: the traced job's spans and stages, plus the
-    untraced jobs' counters and the tracing overhead against them."""
+def traced_metrics(tr, stages, start_s: float, traced: dict, timed: dict) -> dict:
+    """Per-layer metrics: the traced job's spans and stages and
+    counters, plus the tracing overhead against the untraced job."""
     from spans import layer_metrics
 
     out = layer_metrics(tr, stages)
-    out["session.start_s"] = statistics.median(starts)
+    out["session.start_s"] = start_s
     # both jobs ran first in a fresh JVM
-    out["trace.overhead_s"] = traced["job_s"] - timed[0]["job_s"]
+    out["trace.overhead_s"] = traced["job_s"] - timed["job_s"]
     for k in COUNTERS:
-        vals = [r["counters"][k] for r in timed if k in r["counters"]]
-        out[k] = statistics.median(vals) if vals else 0.0
+        out[k] = float(traced["counters"].get(k, 0.0))
     return out
 
 
-def run(wl, dirs: dict, seed: int, seconds: float, traced: bool) -> dict:
+def run(wl, dirs: dict, seed: int, traced: bool) -> dict:
     from spans import NullTracer, Tracer, attribute, event_log_conf, read_event_log
 
     spark = None
-    setups, starts = [], []
     try:
-        for _ in range(SETUPS):
-            if spark is not None:
-                spark.stop()
-            shutil.rmtree(dirs["inputs"])
-            os.makedirs(dirs["inputs"])
-            t0 = time.perf_counter()
-            spark = start_session()
-            t1 = time.perf_counter()
-            inp = wl.generate(seed, dirs["inputs"], wl.pages)
-            setups.append(time.perf_counter() - t0)
-            starts.append(t1 - t0)
+        t0 = time.perf_counter()
+        spark = start_session()
+        start_s = time.perf_counter() - t0
+        inp = wl.generate(seed, dirs["inputs"])
+        setup_s = time.perf_counter() - t0
 
-        jobs = max(1, round(seconds / wl.nominal_job_s))
-        timed = [measure(wl, spark, NullTracer(), inp, dirs) for _ in range(jobs)]
-
-        reps, layers = list(timed), None
+        timed = measure(wl, spark, NullTracer(), inp, dirs)
+        reps, layers = [timed], None
         if traced:
             spark.stop()
             spark = None
@@ -192,8 +204,12 @@ def run(wl, dirs: dict, seed: int, seconds: float, traced: bool) -> dict:
                 spark = None
             finally:
                 tr.uninstall()
+            digests = {r["counters"]["lpa.digest"] for r in reps if "lpa.digest" in r["counters"]}
+            if len(digests) > 1:
+                reps[-1]["bad"].setdefault("lpa", []).append(
+                    f"labels differ between two runs of one input: {sorted(digests)}")
             stages = attribute(tr, read_event_log(dirs["events"]))
-            layers = traced_metrics(tr, stages, starts, reps[-1], timed)
+            layers = traced_metrics(tr, stages, start_s, reps[-1], timed)
         props = wl.properties(inp)
     finally:
         try:
@@ -201,16 +217,16 @@ def run(wl, dirs: dict, seed: int, seconds: float, traced: bool) -> dict:
                 spark.stop()
         finally:
             stop_jvm()
-    return {"setups": setups, "reps": reps, "timed": timed, "props": props, "layers": layers}
+    return {"setup_s": setup_s, "reps": reps, "timed": timed, "props": props,
+            "layers": layers}
 
 
 def end_to_end_metrics(res: dict) -> dict[str, float]:
-    """Median set-up time, and median job wall and CPU time over the
-    untraced jobs."""
+    """Set-up time, and the untraced job's wall and CPU time."""
     return {
-        "setup_s": statistics.median(res["setups"]),
-        "job_s": statistics.median(r["job_s"] for r in res["timed"]),
-        "cpu_s": statistics.median(r["cpu_s"] for r in res["timed"]),
+        "setup_s": res["setup_s"],
+        "job_s": res["timed"]["job_s"],
+        "cpu_s": res["timed"]["cpu_s"],
     }
 
 
@@ -245,32 +261,36 @@ def main(argv=None) -> int:
         from workloads import WORKLOADS  # fails here without the engine's sources
 
         wl = WORKLOADS[args.workload]
-        res = run(wl, dirs, args.seed, args.seconds, bool(args.trace))
+        res = run(wl, dirs, args.seed, bool(args.trace))
     finally:
+        stop_descendants()
         shutil.rmtree(WORK, ignore_errors=True)
 
     reps, timed = res["reps"], res["timed"]
-    failed = [r for r in reps if r["bad"]]
-    for r in failed:
-        print("FAILED:", "; ".join(r["bad"]), file=sys.stderr)
+    attempted = len(wl.ops) * len(reps)
+    failed = 0
+    for r in reps:
+        for op, problems in r["bad"].items():
+            if problems:
+                failed += 1
+                print(f"FAILED {wl.name} {op}:", "; ".join(problems), file=sys.stderr)
     end_to_end = end_to_end_metrics(res)
     shown = dict(end_to_end)
     for k in ("steady_edges_per_s", "resume_s"):
-        vals = [r["counters"][k] for r in timed if k in r["counters"]]
-        if vals:
-            shown[k] = statistics.median(vals)
+        if k in timed["counters"]:
+            shown[k] = timed["counters"][k]
     print(f"{wl.name} seed={args.seed} input={json.dumps(res['props'])}")
-    print(f"  setups_s {[round(s, 3) for s in res['setups']]}"
-          f" jobs_s {[round(r['job_s'], 3) for r in reps]}")
+    print(f"  jobs_s {[round(r['job_s'], 3) for r in reps]}")
+    print(f"  counters {json.dumps(timed['counters'])}")
     for k, v in shown.items():
         print(f"  {k:<20} {v:14.4f} {unit_of(k)}")
-    print(f"  {'error_rate':<20} {len(failed) / len(reps):14.4f} ({len(failed)}/{len(reps)} jobs)")
+    print(f"  {'error_rate':<20} {failed / attempted:14.4f} ({failed}/{attempted} operations)")
 
     metrics = res["layers"] if args.trace else end_to_end
     print(json.dumps({
         "correct": not failed,
-        "attempted": len(reps),
-        "failed": len(failed),
+        "attempted": attempted,
+        "failed": failed,
         "metrics": {k: {"value": v, "unit": unit_of(k)} for k, v in metrics.items()},
     }))
     return 0

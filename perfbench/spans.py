@@ -85,7 +85,8 @@ class Tracer:
         """Wrap the public entry point of every measured module."""
         from communitydetection_jl_spark import session
         from communitydetection_jl_spark.functions import ids
-        from communitydetection_jl_spark.operators import pagerank, triangles
+        from communitydetection_jl_spark.operators import (components, lpa, modularity,
+                                                           pagerank, triangles)
         from communitydetection_jl_spark.plans.iterstate import StateLoop
         from communitydetection_jl_spark.plans.runner import RunLedger
         from communitydetection_jl_spark.sources import pages
@@ -101,6 +102,9 @@ class Tracer:
             ("ids", ids, ("densify_edges", "dense_ids", "ranked_by",
                           "rank_small_or_large")),
             ("pagerank", pagerank, ("pagerank",)),
+            ("lpa", lpa, ("lpa",)),
+            ("modularity", modularity, ("modularity",)),
+            ("components", components, ("connected_components",)),
             ("triangles", triangles, ("vertex_triangle_counts",)),
         ):
             for fn in fns:
@@ -291,20 +295,29 @@ def operator_phases(tr: Tracer, op: Span, stages: list[Stage]) -> dict:
     return out
 
 
+ITERATIVE = ("pagerank", "lpa", "components")
+
+
 def layer_metrics(tr: Tracer, stages: list[Stage]) -> dict[str, float]:
-    """Per-layer metrics of one traced job (root span ``job``)."""
+    """Per-layer metrics of one traced job (root span ``job``); layers
+    the job does not run read 0."""
     root = tr.named("job")[0]
     out: dict[str, float] = {}
 
-    calls = [operator_phases(tr, s, stages) for s in tr.named("pagerank")]
-    for p in PHASES:
-        for k in ("s", "shuffle_write_mb", "spill_mb", "gc_s"):
-            out[f"pagerank.{p}.{k}"] = sum(c[p][k] for c in calls)
-    steps = [d for c in calls for d in c["_steps"]]
-    out["pagerank.supersteps"] = len(steps)
-    out["pagerank.superstep.median_s"] = statistics.median(steps) if steps else 0.0
-    out["pagerank.superstep.peak_exec_mem_mb"] = max(
-        (c["_peak_mem"] for c in calls), default=0) / MIB
+    for op in ITERATIVE:
+        calls = [operator_phases(tr, s, stages) for s in tr.named(op)]
+        for p in PHASES:
+            for k in ("s", "shuffle_write_mb", "spill_mb", "gc_s"):
+                out[f"{op}.{p}.{k}"] = sum(c[p][k] for c in calls)
+        steps = [d for c in calls for d in c["_steps"]]
+        if op == "components":
+            out["components.rounds"] = len(steps)
+            continue
+        if op == "pagerank":  # lpa.supersteps is the operator's own count
+            out["pagerank.supersteps"] = len(steps)
+        out[f"{op}.superstep.median_s"] = statistics.median(steps) if steps else 0.0
+        out[f"{op}.superstep.peak_exec_mem_mb"] = max(
+            (c["_peak_mem"] for c in calls), default=0) / MIB
 
     def inclusive(name: str, keys) -> None:
         spans = tr.named(name)
@@ -316,6 +329,7 @@ def layer_metrics(tr: Tracer, stages: list[Stage]) -> dict[str, float]:
             out[f"{name}.{k}"] = sums[k]
 
     inclusive("triangles", ("shuffle_write_mb", "spill_mb", "gc_s"))
+    inclusive("modularity", ("shuffle_write_mb", "spill_mb"))
     inclusive("pages.extract", ("shuffle_write_mb", "spill_mb"))
     inclusive("ids.densify", ("shuffle_write_mb",))
 
