@@ -1,8 +1,8 @@
 """Reference results the benchmark checks the engine's outputs against.
 
-All of them run outside the timed region: NumPy for PageRank, LPA's
-fixpoint and modularity, DuckDB for triangle counts. Connected
-components come from ``gen.components_of``.
+All of them run outside the timed region: NumPy for PageRank, LPA and
+modularity, DuckDB for triangle counts. Connected components come from
+``gen.components_of``.
 """
 
 from __future__ import annotations
@@ -31,24 +31,41 @@ def pagerank(src, dst, w, damping: float = 0.85, tol: float = 1e-13):
     return ids, p
 
 
-def lpa_unstable(src, dst, ids, labels) -> int:
-    """Vertices whose label is not a most frequent label among their
-    neighbours: the sticky-argmax fixpoint test of unit-vote LPA, which
-    hears each arc in both directions (so a mutual link votes twice)."""
-    lab = labels[np.searchsorted(ids, np.concatenate([src, dst]))]
-    ls, ld = lab[: src.size], lab[src.size:]
-    off = src != dst
-    listener = np.searchsorted(ids, np.concatenate([dst, src[off]]))
-    heard = np.concatenate([ls, ld[off]])
-    pair = listener.astype(np.int64) * (labels.max() + 1) + heard
-    uniq, cnt = np.unique(pair, return_counts=True)
-    who = uniq // (labels.max() + 1)
-    best = np.zeros(ids.size, np.int64)
-    np.maximum.at(best, who, cnt)
-    own = np.zeros(ids.size, np.int64)
-    mine = (uniq % (labels.max() + 1)) == labels[who]
-    own[who[mine]] = cnt[mine]
-    return int(np.count_nonzero(own < best))
+def lpa(src, dst, ids, parity, max_iter: int):
+    """(labels, movers per superstep) of unit-vote LPA as the engine
+    runs it: identity labels; each arc heard in both directions (a
+    self-loop once); at superstep t (from 0) only vertices whose
+    ``parity`` is t % 2 move, each to its most heard label, ties to its
+    own label, then to the smallest; stop after two consecutive
+    zero-mover supersteps or ``max_iter``. ``ids`` is sorted, so a label
+    is kept as the index of the vertex it names."""
+    n = ids.size
+    s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    off = s != d
+    listener, speaker = np.concatenate([s, d[off]]), np.concatenate([d, s[off]])
+    lab = np.arange(n)
+    movers = []
+    for t in range(max_iter):
+        act = parity[listener] == t % 2
+        key, cnt = np.unique(listener[act] * n + lab[speaker[act]], return_counts=True)
+        who, lbl = key // n, key % n
+        order = np.lexsort((lbl, lbl != lab[who], -cnt, who))
+        first = order[np.r_[True, who[order][1:] != who[order][:-1]]]
+        new = lab.copy()
+        new[who[first]] = lbl[first]
+        movers.append(int(np.count_nonzero(new != lab)))
+        lab = new
+        if movers[-2:] == [0, 0]:
+            break
+    return ids[lab], movers
+
+
+def first_seen(labels):
+    """Renumber a labelling (over sorted ids) as the engine's
+    ``permute_labels`` does: the community of the smallest id is 1, the
+    next new community 2, and so on."""
+    _, first, inv = np.unique(labels, return_index=True, return_inverse=True)
+    return np.argsort(np.argsort(first))[inv] + 1
 
 
 def modularity(src, dst, w, ids, labels) -> float:

@@ -15,6 +15,7 @@ import time
 
 import numpy as np
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 import gen
 import oracles
@@ -105,15 +106,22 @@ class RankResume:
 class WebCommunities:
     """From a crawl to communities: pages -> latest-capture dedup -> href
     extraction -> restrict to corpus -> raw edge table written -> dense
-    ids -> dense edge table written; then, on that table, LPA to its own
-    convergence rule (hitting ``lpa_cap`` is a failed operation),
-    modularity of LPA's labels, connected components and per-vertex
-    triangle counts."""
+    ids -> dense edge table written; then, on that table, LPA for
+    ``lpa_supersteps`` supersteps, modularity of LPA's labels, connected
+    components and per-vertex triangle counts.
+
+    LPA runs a fixed number of supersteps, not to convergence: on about
+    half of the seeds the engine's semi-synchronous schedule never
+    converges (two adjacent vertices of one hash parity swap labels
+    forever), so a convergence rule would fail those runs. Twelve
+    supersteps is below every converging seed's count (14-21), so each
+    run does the same work, full gathers and then the delta-count path.
+    The check replays the schedule superstep by superstep in NumPy."""
 
     name = "web_communities"
     ops = ("ingest", "lpa", "modularity", "components", "triangles")
     pages = 8_000
-    lpa_cap = 30
+    lpa_supersteps = 12
 
     def generate(self, seed: int, work: str, pages: int | None = None) -> dict:
         pages = pages or self.pages
@@ -140,7 +148,8 @@ class WebCommunities:
             dim_pd = dim.toPandas()
             dim.unpersist()
         with tr.span("lpa"):
-            res = lpa.lpa(spark.read.parquet(dense_path), mode="tables", max_iter=self.lpa_cap)
+            res = lpa.lpa(spark.read.parquet(dense_path), mode="tables",
+                          max_iter=self.lpa_supersteps)
             labels = res.labels.toPandas()
         with tr.span("modularity"):
             q = modularity.modularity(spark.read.parquet(dense_path), res.labels)
@@ -185,15 +194,20 @@ class WebCommunities:
         verts = np.union1d(src, dst)
         labels = out["labels"].sort_values("id")
         vid, comm = labels["id"].to_numpy(), labels["comm"].to_numpy()
-        if res.iterations >= self.lpa_cap:
-            bad["lpa"].append(f"hit the cap of {self.lpa_cap} supersteps without converging; "
-                              f"last movers {res.changed_history[-6:]}")
+        # the engine's move parity, from Spark's own hash of the id column
+        edges = spark.read.parquet(out["dense"])
+        parity = (edges.select(F.col("src").alias("id")).union(edges.select("dst")).distinct()
+                  .select("id", F.expr("pmod(xxhash64(id), 2)").alias("p"))
+                  .toPandas().sort_values("id")["p"].to_numpy())
+        want_lbl, want_movers = oracles.lpa(src, dst, verts, parity, self.lpa_supersteps)
+        want_lbl = oracles.first_seen(want_lbl)
+        if res.changed_history != want_movers:
+            bad["lpa"].append(f"movers per superstep {res.changed_history}, "
+                              f"NumPy gives {want_movers}")
         if not np.array_equal(vid, verts):
             bad["lpa"].append(f"{vid.size} labelled ids, the graph has {verts.size} vertices")
-        else:
-            unstable = oracles.lpa_unstable(src, dst, vid, comm)
-            if unstable:
-                bad["lpa"].append(f"{unstable} vertices are not at a sticky-argmax fixpoint")
+        elif not np.array_equal(comm, want_lbl):
+            bad["lpa"].append(f"{np.count_nonzero(comm != want_lbl)} labels differ from NumPy's")
         want_q = oracles.modularity(src, dst, w, vid, comm)
         if not np.isclose(out["q"], want_q, rtol=0, atol=1e-6):
             bad["modularity"].append(f"Q = {out['q']!r}, NumPy gives {want_q!r}")
