@@ -20,15 +20,16 @@ under bulk-synchronous execution is impossible in general (SURVEY.md
    flips labels forever); hash-parity alternation is the standard
    deterministic fix and converges like async LPA.
 
-Convergence: semi-sync runs stop after two consecutive zero-mover
+Convergence: the run stops after two consecutive zero-mover
 supersteps — one quiet superstep per parity over the same labeling is
 a true fixpoint (a lone quiet superstep only certifies one parity).
-Sync runs keep the one-shot rule (zero changes and zero would-be
-movers, which coincide when every vertex is evaluated).
 
 Execution discipline (plans/iterstate.py): per superstep exactly ONE
-action — the state write with changed/wants counts observed on the
-same job. Three tricks keep the plan narrow:
+action — the state write with the mover counts observed on the same
+job. Each superstep runs one of three plans, chosen in ONE place in
+label_propagation: the delta-counts argmax, the identity-init
+min-neighbor first superstep, or the full gather. Three tricks keep
+the full gather narrow:
 
  - self rows: the listener's own label enters the gather as a
    zero-weight row flagged cur=true, so (a) every vertex is covered
@@ -49,11 +50,10 @@ same job. Three tricks keep the plan narrow:
    mover-degree bound is small, gather only listeners whose argmax
    inputs could have changed — exact under sticky tie-breaking
    because an unchanged vote multiset cannot flip a sticky argmax.
-   Semi-sync runs track movers of the last TWO supersteps (state
-   column ``prevch``): a vertex inactive at superstep t re-evaluates
-   at t+1, so movers/mover-neighbors from BOTH t−1 and t are the
-   exact stale set (sync runs keep the one-superstep movers + gated
-   would-be movers form);
+   The run tracks movers of the last TWO supersteps (state column
+   ``prevch``): a vertex inactive at superstep t re-evaluates at t+1,
+   so movers/mover-neighbors from BOTH t−1 and t are the exact stale
+   set;
  - labels round-trip through parquet/bucketed tables (lineage
    truncation + resume snapshots; see iterstate docstring for the
    measured numbers).
@@ -61,15 +61,24 @@ same job. Three tricks keep the plan narrow:
 
 from __future__ import annotations
 
+import math
 import time as _time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from ..functions.graph import csr_adjacency, vertices_of, with_weight
+from ..functions.graph import csr_adjacency, with_weight
 from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts, state_codec
 from .triangles import edge_common_neighbors
+
+# Peak-diversity gather widening (_gather_parts): the per-task
+# (listener, label) group budget of a full gather's aggregation, and
+# the last superstep that may widen. Constants, not deployment knobs:
+# the budget bounds one task's aggregation state, which does not
+# depend on the cluster size.
+_GATHER_GROUP_BUDGET = 1_500_000
+_GATHER_WIDEN_UNTIL = 3
 
 
 @dataclass
@@ -84,6 +93,18 @@ class LPAResult:
     # True when superstep 1 ran the identity-init min-neighbor plan
     # (valid only when the sym CSR observed zero duplicate pairs)
     first_superstep_fast: bool = False
+
+
+def _vote_key(cnt, cur, lbl):
+    """The argmax ordering every LPA plan shares, as a struct for
+    max()/greatest(): count, then the sticky flag ``cur``, then the
+    smallest label."""
+    return F.struct(
+        cnt.alias("cnt"),
+        cur.cast("int").alias("t1"),
+        (-lbl).alias("t2"),
+        lbl.alias("lbl"),
+    )
 
 
 def _struct_argmax(counts: DataFrame, sticky: bool) -> DataFrame:
@@ -104,12 +125,8 @@ def _struct_argmax(counts: DataFrame, sticky: bool) -> DataFrame:
     cardinality peaks."""
     return counts.groupBy("id").agg(
         F.max(
-            F.struct(
-                F.col("cnt"),
-                (F.col("cur").cast("int") if sticky else F.lit(0)).alias("t1"),
-                (-F.col("lbl")).alias("t2"),
-                F.col("lbl").alias("lbl"),
-            )
+            _vote_key(F.col("cnt"), F.col("cur") if sticky else F.lit(0),
+                      F.col("lbl"))
         ).alias("_want"),
         F.max(
             F.struct(F.col("cur").cast("int").alias("c"), F.col("lbl").alias("lbl"))
@@ -125,8 +142,6 @@ def lpa_superstep(
     sym_edges: DataFrame,
     labels: DataFrame,
     sticky: bool = True,
-    active_parity: int | None = None,
-    parity_expr=None,
     active: DataFrame | None = None,
     listener_pred=None,
     gather_parts: int | None = None,
@@ -135,8 +150,8 @@ def lpa_superstep(
     or bare (src, dst) for the unit-vote fast path — then votes are
     row counts and the gather streams 16B int pairs instead of 24B
     (the same bytes-per-message cut that fixed PageRank's scaling
-    efficiency). ``labels`` is (id, lbl); returns (id, lbl, changed,
-    wants).
+    efficiency). ``labels`` is (id, lbl); returns (id, lbl, changed)
+    with every evaluated listener moved to its argmax.
 
     ``listener_pred`` (a Column predicate over ``id``) restricts the
     gather AND the output to matching listeners — label_propagation
@@ -158,7 +173,7 @@ def lpa_superstep(
         # agg and the (id) argmax agg. ``gather_parts`` overrides the
         # session partition count for THIS exchange only — the caller
         # widens it at peak label diversity so each task's aggregation
-        # state stays inside execution memory (see label_propagation).
+        # state stays inside execution memory (see _gather_parts).
         return (df.repartition(gather_parts, "id") if gather_parts
                 else df.repartition("id"))
 
@@ -224,33 +239,25 @@ def lpa_superstep(
     # argmax (see _struct_argmax for the physical-plan rationale and
     # the rejected packed-key alternative)
     best = _struct_argmax(counts, sticky)
-    want = F.col("want_lbl")
-    if active_parity is not None:
-        # which half of the vertices may move this superstep; the
-        # default hash parity is structure-blind, while an explicit
-        # parity_expr (e.g. pmod(id, 2)) makes the whole run
-        # SQL-oracle-reproducible (driver correctness gate)
-        pexpr = parity_expr if parity_expr is not None else F.pmod(F.xxhash64("id"), F.lit(2))
-        new_lbl = F.when(
-            pexpr == F.lit(active_parity), want
-        ).otherwise(F.col("cur_lbl"))
-    else:
-        new_lbl = want
     return best.select(
         "id",
-        new_lbl.alias("lbl"),
-        (new_lbl != F.col("cur_lbl")).alias("changed"),
-        (want != F.col("cur_lbl")).alias("wants"),
+        F.col("want_lbl").alias("lbl"),
+        (F.col("want_lbl") != F.col("cur_lbl")).alias("changed"),
     )
 
 
 def _vote_edges(edges: DataFrame, weighted: bool, cn_bonus: bool) -> DataFrame:
     """Symmetrized edge view with a ``vote`` column — or bare
     (src, dst) pairs in the default unit-vote case (votes become row
-    counts in lpa_superstep; 33% fewer bytes per gathered message)."""
+    counts in lpa_superstep; 33% fewer bytes per gathered message).
+    Every vertex of ``edges`` is a src (and a dst) of the view."""
     if cn_bonus:
-        e = edge_common_neighbors(edges)  # (src, dst, weight, cn)
+        e = edge_common_neighbors(edges)  # (src, dst, weight, cn), no loops
         e = e.select("src", "dst", (F.lit(1.0) + F.col("cn")).alias("vote"))
+        # a zero vote for the speaker's own label changes no count, but
+        # keeps a vertex whose only edge is a self-loop in the view
+        e = e.unionByName(edges.filter(F.col("src") == F.col("dst")).select(
+            "src", "dst", F.lit(0.0).alias("vote")))
     elif weighted:
         e = with_weight(edges).select("src", "dst", F.col("weight").alias("vote"))
     else:
@@ -263,15 +270,236 @@ def _vote_edges(edges: DataFrame, weighted: bool, cn_bonus: bool) -> DataFrame:
     return e.unionByName(rev)
 
 
+def _gather_parts(it: int, total_msgs: int, P: int) -> int | None:
+    """Exchange width of superstep ``it``'s full gather; None keeps P.
+
+    Peak-diversity gather widening: the first few full gathers of an
+    identity-init run aggregate near-distinct (listener, label)
+    groups — at 2m/P groups per task the post-exchange aggregation
+    outgrows per-task execution memory and spills (A/B at the
+    163M-arc bench corpus, 24g heap: superstep 2 median ~45s at
+    P=64 vs ~21s at 128 gather partitions; identical mover
+    histories). Widen THAT exchange only, so each task's agg state
+    fits; the argmax output then takes one extra n-row exchange back
+    to the P-bucketed state join, which is two orders of magnitude
+    smaller than the spill it avoids. Later supersteps have
+    collapsed label sets (group count ≪ messages), so widening is
+    capped to the first ``_GATHER_WIDEN_UNTIL`` supersteps."""
+    if it > _GATHER_WIDEN_UNTIL:
+        return None
+    # the parity filter halves the messages a gather aggregates
+    per_task = total_msgs // 2 // max(P, 1)
+    if per_task <= _GATHER_GROUP_BUDGET:
+        return None
+    return min(P * math.ceil(per_task / _GATHER_GROUP_BUDGET), 8 * P)
+
+
+def _next_state(state: DataFrame, best: DataFrame, new_lbl) -> DataFrame:
+    """The next state (id, lbl, changed, prevch, prev, deg) of every
+    plan. ``best`` holds the argmax inputs of the listeners evaluated
+    this superstep; ``new_lbl`` is a Column over them and the current
+    label ``cur_lbl``, and must give ``cur_lbl`` for the vertices
+    ``best`` lacks (they pass through unchanged)."""
+    return state.select(
+        "id", F.col("lbl").alias("cur_lbl"),
+        F.col("changed").alias("pch"), "deg",
+    ).join(best, "id", "left").select(
+        "id",
+        new_lbl.alias("lbl"),
+        (new_lbl != F.col("cur_lbl")).alias("changed"),
+        F.col("pch").alias("prevch"),
+        F.col("cur_lbl").alias("prev"),
+        "deg",
+    )
+
+
+def _gather_plan(sym: DataFrame, state: DataFrame, may_move, sticky: bool,
+                 small_frontier: bool, gather_parts: int | None) -> DataFrame:
+    """Full gather: evaluate ONLY active-parity listeners
+    (lpa_superstep's listener_pred) — half the exchange volume and agg
+    cardinality of the superstep's dominant stage; inactive rows pass
+    through the next-state left join unchanged.
+
+    ``small_frontier`` narrows the gather to the stale set = movers of
+    the last TWO supersteps (changed | prevch) plus their neighbors: a
+    vertex inactive at t re-evaluates at t+1, so both supersteps' moves
+    (multiset changes AND the movers' own sticky-state changes) are
+    exactly what it missed; with the parity filter, every evaluated
+    wanter moves, so no would-be mover is left out."""
+    csr = "srcs" in sym.columns
+    gather_sym = sym
+    active_set = None
+    if small_frontier:
+        movers = state.filter("changed or prevch").select("id")
+        hit = sym.join(
+            F.broadcast(movers.withColumnRenamed("id", "dst")),
+            "dst", "left_semi",
+        )
+        if csr:
+            nbrs = hit.select(F.explode("srcs").alias("id"))
+        else:
+            nbrs = hit.select(F.col("src").alias("id"))
+        active = nbrs.unionByName(movers).distinct()
+        if csr:
+            # CSR rows can't be pre-filtered by listener;
+            # the broadcast filter applies post-explode
+            active_set = active
+        else:
+            gather_sym = sym.join(
+                F.broadcast(active.withColumnRenamed("id", "src")),
+                "src",
+                "left_semi",
+            )
+    ev = lpa_superstep(
+        gather_sym,
+        state.select("id", "lbl"),
+        sticky=sticky,
+        active=active_set,
+        listener_pred=may_move,
+        gather_parts=gather_parts,
+    ).select("id", F.col("lbl").alias("want_lbl"))
+    return _next_state(state, ev, F.coalesce("want_lbl", F.col("cur_lbl")))
+
+
+def _first_superstep_plan(sym: DataFrame, state: DataFrame, may_move,
+                          sym_dups: int) -> DataFrame:
+    """Identity-init first superstep, min-neighbor plan.
+
+    The general plan's (listener, label) count aggregation peaks
+    EXACTLY here — with identity labels its group cardinality is ~2m
+    (near-zero map-side combining, the single most expensive superstep
+    at web scale). Instead: every unique (listener, speaker) pair is a
+    cnt-1 vote, so one n-group min aggregation with perfect partial
+    combining yields the best single-vote candidate, and the (rare,
+    exactly-counted) duplicated pairs get their true counts from only
+    the rows that contain them. The min-agg re-lists a duplicated
+    speaker as a weaker cnt-1 candidate of the same label — harmless,
+    its true (cnt>1) candidate dominates. Equivalence cases (self-loops
+    beat cnt-1 neighbors via the sticky flag, duplicated > smaller-id
+    single, isolated keep themselves) are pinned by
+    test_lpa_first_superstep_fastpath and transitively by the lpa_full
+    recursive-CTE oracle.
+
+    Only active-parity listeners can act — the min-agg and
+    dup-correction gathers keep only their messages (half the
+    exchange); inactive rows have no uniq/dupc row, so their
+    candidates degenerate to the self candidate (want=cur)."""
+    uniq = (
+        sym.select(F.col("dst").alias("spk"), F.explode("srcs").alias("id"))
+        .filter(may_move)
+        .groupBy("id")
+        .agg(
+            F.min(
+                F.when(F.col("spk") != F.col("id"), F.col("spk"))
+            ).alias("mn"),
+            F.max((F.col("spk") == F.col("id")).cast("int")
+                  ).alias("selfv"),
+        )
+    )
+    best = uniq
+    if sym_dups:
+        dupc = (
+            sym.filter(F.size("srcs") != F.size(F.array_distinct("srcs")))
+            .select(F.col("dst").alias("spk"), F.explode("srcs").alias("id"))
+            .filter(may_move)
+            .groupBy("id", "spk")
+            .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+            .filter(F.col("cnt") > 1)
+            .groupBy("id")
+            .agg(F.max(_vote_key(F.col("cnt"), F.col("spk") == F.col("id"),
+                                 F.col("spk"))).alias("wd"))
+        )
+        best = uniq.join(dupc, "id", "left")
+    cand_self = _vote_key(
+        F.coalesce(F.col("selfv"), F.lit(0)).cast("long"), F.lit(1),
+        F.col("cur_lbl"))
+    cand_min = F.when(
+        F.col("mn").isNotNull(),
+        _vote_key(F.lit(1).cast("long"), F.lit(0), F.col("mn")),
+    )
+    cands = [cand_self, cand_min]
+    if sym_dups:
+        cands.append(F.col("wd"))
+    return _next_state(state, best, F.greatest(*cands).getField("lbl"))
+
+
+def _delta_plan(state: DataFrame, counts: DataFrame, may_move,
+                sticky: bool) -> DataFrame:
+    """Argmax over the maintained (id, lbl, cnt) counts: both sides
+    bucketed by id, zero exchange. Only active-parity listeners' argmax
+    can act, so the counts side is parity-filtered up front — inactive
+    rows fall out of ``best`` and pass through the next-state left join
+    (keeping their current label), exactly like the filtered full
+    gather."""
+    j = counts.select("id", "lbl", "cnt").filter(may_move).join(
+        state.select("id", F.col("lbl").alias("cur_lbl")), "id"
+    )
+    cur = (F.col("lbl") == F.col("cur_lbl")) if sticky else F.lit(0)
+    best = j.groupBy("id").agg(
+        F.max(_vote_key(F.col("cnt"), cur, F.col("lbl"))).alias("_want")
+    ).select("id", F.col("_want.lbl").alias("want_lbl"))
+    return _next_state(state, best, F.coalesce("want_lbl", F.col("cur_lbl")))
+
+
+def _apply_moves(sym: DataFrame, state: DataFrame, counts: DataFrame,
+                 broadcast: bool, P: int) -> DataFrame:
+    """The counts table after the last superstep's moves, built from
+    the movers' adjacency only: per mover v, every listener u of v gets
+    cnt(u, old_lbl) −= 1, cnt(u, new_lbl) += 1."""
+    movers = state.filter("changed").select(
+        F.col("id").alias("dst"),
+        F.col("prev").alias("old_lbl"),
+        F.col("lbl").alias("new_lbl"),
+    )
+    if broadcast:
+        # small mover set: zero-exchange broadcast join
+        mside = F.broadcast(movers)
+    else:
+        # burst supersteps: ship the movers through one
+        # hash(dst, P) exchange instead of a driver
+        # broadcast; the CSR side is bucketed on dst so
+        # only the (much smaller) movers side moves, and
+        # a shuffle-hash hint keeps Spark from sorting
+        # the bucketed CSR for a merge join
+        mside = movers.repartition(P, "dst").hint("shuffle_hash")
+    upd = (
+        sym.join(mside, "dst")
+        .select(
+            F.explode("srcs").alias("id"),
+            "old_lbl", "new_lbl",
+        )
+        .select(
+            "id",
+            F.explode(F.array(
+                F.struct(
+                    F.col("old_lbl").alias("lbl"),
+                    F.lit(-1).cast("long").alias("cnt"),
+                ),
+                F.struct(
+                    F.col("new_lbl").alias("lbl"),
+                    F.lit(1).cast("long").alias("cnt"),
+                ),
+            )).alias("d"),
+        )
+        .select("id", "d.lbl", "d.cnt")
+    )
+    return (
+        counts.select("id", "lbl", "cnt")
+        .unionByName(upd)
+        .repartition(P, "id")
+        .groupBy("id", "lbl")
+        .agg(F.sum("cnt").alias("cnt"))
+        .filter(F.col("cnt") > 0)
+    )
+
+
 def label_propagation(
     edges: DataFrame,
     weighted: bool = False,
     cn_bonus: bool = False,
     sticky: bool = True,
-    semi_sync: bool = True,
     max_iter: int = 200,
     renumber: bool = True,
-    init_labels: DataFrame | None = None,
     frontier: bool = True,
     frontier_max: int = 200_000,
     ledger=None,
@@ -285,6 +513,10 @@ def label_propagation(
     """Run LPA to fixpoint. ``cn_bonus=True`` gives nsdlpa
     (src/label_propagation.jl:77-96); ``weighted=True`` uses edge
     weights as votes (the hlpa/mlpa gather, src/hlpa.jl:3-28).
+
+    ``parity_expr`` (a Column over ``id``, e.g. pmod(id, 2)) replaces
+    the structure-blind pmod(xxhash64(id), 2) move parity, which makes
+    the whole run SQL-oracle-reproducible (driver correctness gate).
 
     ``frontier=True`` switches to broadcast-filtered gathers once the
     observed mover count drops below ``frontier_max`` — exact under
@@ -304,7 +536,7 @@ def label_propagation(
     the counts table starts at ~2m rows and shrinks toward n as labels
     consolidate, so the switch is gated on the OBSERVED mover-degree
     bound (the same fbound metric that gates the frontier broadcast):
-    engage when Σ(deg+1 of movers) + wants ≤ ``delta_msgs_frac``·2m.
+    engage when Σ(deg+1 of movers) + movers ≤ ``delta_msgs_frac``·2m.
     Movers up to ``delta_bcast_max`` are broadcast to the bucketed CSR
     table (zero exchange); ABOVE the cap they instead take one bucketed
     hash(dst, P) shuffle join — the 100×-scale path, where a graph can
@@ -327,10 +559,13 @@ def label_propagation(
     sym_plan = _vote_edges(edges, weighted, cn_bonus)
     unit = "vote" not in sym_plan.columns
     sym_table = None
-    sym_dups = sym_msgs = None
+    sym_dups = None
+    # total_msgs = Σdeg = 2m, the message count of one full gather (the
+    # delta gate's denominator), taken from the build job itself
     if mode == "tables":
         sym_table = f"{loop.name}_sym"
         loop._drop_table(sym_table)
+        sym_obs = Observation(f"{loop.name}_sym")
         if unit:
             # CSR speaker table (dst, srcs): halves gather bytes.
             # Hub rows are chunked at ~64k neighbors (csr_adjacency) so
@@ -344,17 +579,17 @@ def label_propagation(
             # listener lands in the SAME chunk row and a per-row
             # array_distinct sees all of them. dups == 0 certifies the
             # identity-init first-superstep fast path below.
-            from pyspark.sql import Observation as _Obs
-
-            dup_obs = _Obs(f"{loop.name}_dups")
             sym_plan = sym_plan.observe(
-                dup_obs,
+                sym_obs,
                 F.coalesce(
                     F.sum(F.size("srcs") - F.size(F.array_distinct("srcs"))),
                     F.lit(0),
                 ).alias("dups"),
                 F.coalesce(F.sum(F.size("srcs")), F.lit(0)).alias("msgs"),
             )
+        else:
+            sym_plan = sym_plan.observe(
+                sym_obs, F.count(F.lit(1)).alias("msgs"))
         # the CSR branch already lands on hash(dst, P) via
         # csr_adjacency(parts=P) — repartitioning again would move the
         # full array data through a second exchange
@@ -362,14 +597,14 @@ def label_propagation(
         if state_codec():
             w = w.option("compression", state_codec())
         w.bucketBy(P, "dst").mode("overwrite").saveAsTable(sym_table)
+        got_sym = sym_obs.get
+        total_msgs = int(got_sym["msgs"])
         if unit:
-            got_dup = dup_obs.get
-            sym_dups = int(got_dup["dups"])
-            sym_msgs = int(got_dup["msgs"])
+            sym_dups = int(got_sym["dups"])
         sym = spark.table(sym_table)
     else:
         sym = sym_plan.repartition(P, "dst").persist()
-        sym.count()
+        total_msgs = sym.count()
     csr = "srcs" in sym.columns
 
     state = None
@@ -383,67 +618,37 @@ def label_propagation(
     if state is None:
         # deg rides in the state so each superstep can OBSERVE
         # sum(deg of movers) — an upper bound on the next active set,
-        # gating the frontier broadcast safely even with hub vertices
-        if csr and init_labels is None:
-            # the symmetrized CSR's speaker keys ARE the vertex set and
-            # listener degree == speaker degree == sum of array sizes,
-            # so the whole state init is ONE n-row agg on the bucketed
-            # table (zero exchange) — previously a 2m-row explode +
-            # shuffle plus a 2m-row vertex distinct, the two most
-            # expensive stages of the warmup superstep
-            state0 = (
-                sym.groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.size("srcs")).cast("long").alias("deg"))
-                .select(
-                    "id",
-                    F.col("id").alias("lbl"),
-                    F.lit(True).alias("changed"),
-                    F.lit(False).alias("wants"),
-                    F.lit(False).alias("prevch"),
-                    F.col("id").alias("prev"),
-                    "deg",
-                )
-            )
-            state = loop.init(state0)
+        # gating the frontier broadcast safely even with hub vertices.
+        # The symmetrized view's speaker keys ARE the vertex set and
+        # listener degree == speaker degree, so the whole state init is
+        # ONE n-row agg on sym (zero exchange on the bucketed CSR table)
+        if csr:
+            deg = F.sum(F.size("srcs")).cast("long")
         else:
-            if init_labels is not None:
-                labels0 = init_labels.select(
-                    "id", F.col(init_labels.columns[1]).alias("lbl")
-                )
-            else:
-                labels0 = vertices_of(edges).select(
-                    "id", F.col("id").alias("lbl")
-                )
-            if csr:
-                degs = (
-                    sym.groupBy(F.col("dst").alias("id"))
-                    .agg(F.sum(F.size("srcs")).cast("long").alias("deg"))
-                )
-            else:
-                degs = sym.groupBy(F.col("src").alias("id")).agg(
-                    F.count(F.lit(1)).alias("deg")
-                )
-            state = loop.init(
-                labels0.join(degs, "id", "left").select(
-                    "id",
-                    "lbl",
-                    F.lit(True).alias("changed"),
-                    F.lit(False).alias("wants"),
-                    F.lit(False).alias("prevch"),
-                    F.col("lbl").alias("prev"),
-                    F.coalesce("deg", F.lit(0)).alias("deg"),
-                )
+            deg = F.count(F.lit(1))
+        state = loop.init(
+            sym.groupBy(F.col("dst").alias("id"))
+            .agg(deg.alias("deg"))
+            .select(
+                "id",
+                F.col("id").alias("lbl"),
+                F.lit(True).alias("changed"),
+                F.lit(False).alias("prevch"),
+                F.col("id").alias("prev"),
+                "deg",
             )
+        )
 
+    # which half of the vertices may move at superstep it+1
+    parity = parity_expr if parity_expr is not None \
+        else F.pmod(F.xxhash64("id"), F.lit(2))
     changed_history: list[int] = []
     iter_secs: list[float] = []
     it = start_iter
-    changed_cnt = wants_cnt = None  # unknown -> full gather
+    changed_cnt = None              # movers of the last superstep
     prev_changed_cnt = None         # movers one superstep earlier
     frontier_bound = None           # Σ(deg+1) over last supersteps' movers
     fbound2_cnt = None              # same over the last TWO supersteps
-    delta_ok = delta and csr and unit and mode == "tables" \
-        and "prev" in state.columns
     # identity-init first superstep: with identity labels, (listener,
     # label) vote groups are exactly the (listener, speaker) pairs, so
     # the argmax needs no 2m-group count — unique pairs contribute cnt-1
@@ -452,63 +657,28 @@ def label_propagation(
     # the few rows that contain them. EXACT for any input; engaged only
     # while the dup mass is small (above ~2% the dup rows approach the
     # general gather's cost anyway). Requires a fresh identity start
-    # (no init_labels, not resumed) under sticky tie-breaking.
+    # (not resumed) under sticky tie-breaking; sym_dups is only
+    # observed on the CSR build.
     simple1 = (
-        csr and unit and sticky and mode == "tables"
-        and init_labels is None and start_iter == 0
+        sticky and start_iter == 0
         and sym_dups is not None
-        and sym_dups <= 0.02 * max(sym_msgs or 0, 1)
+        and sym_dups <= 0.02 * max(total_msgs, 1)
     )
     used_fast1 = False
     counts = None            # delta mode: materialized (id, lbl, cnt)
     counts_loop = None
     counts_fresh = False     # just (re)built from current labels?
     delta_from = None
-    # one n-row agg on the (materialized) state: Σdeg = 2m is the
-    # delta gate's denominator (previously computed lazily at the
-    # first engage check)
-    total_msgs = int(
-        state.agg(F.sum("deg")).collect()[0][0] or 0)
-    # Peak-diversity gather widening: the first few full gathers of an
-    # identity-init run aggregate near-distinct (listener, label)
-    # groups — at 2m/P groups per task the post-exchange aggregation
-    # outgrows per-task execution memory and spills (A/B at the
-    # 163M-arc bench corpus, 24g heap: superstep 2 median ~45s at
-    # P=64 vs ~21s at 128 gather partitions; identical mover
-    # histories). Widen THAT exchange only, so each task's agg state
-    # fits; the argmax output then takes one extra n-row exchange back
-    # to the P-bucketed state join, which is two orders of magnitude
-    # smaller than the spill it avoids. Later supersteps have
-    # collapsed label sets (group count ≪ messages), so widening is
-    # capped to the first ``_gw_until`` supersteps.
-    _gw_budget = int(
-        _os.environ.get("SPARK_GRAFT_GATHER_GROUP_BUDGET", "1500000"))
-    _gw_until = int(_os.environ.get("SPARK_GRAFT_GATHER_WIDEN_UNTIL", "3"))
-    _gp_force = int(_os.environ.get("SPARK_GRAFT_GATHER_PARTS", "0")) or None
-
-    def _gather_parts(it_1based: int) -> int | None:
-        if _gp_force:
-            return _gp_force
-        if it_1based > _gw_until:
-            return None
-        msgs = total_msgs // 2 if semi_sync else total_msgs
-        per_task = msgs // max(P, 1)
-        if per_task <= _gw_budget:
-            return None
-        import math as _math
-
-        return min(P * _math.ceil(per_task / _gw_budget), 8 * P)
     # shuffle partitions = bucket count keeps the gather agg and the
     # state join co-partitioned with zero extra exchange (restored via
     # context manager even if a superstep raises)
     with shuffle_parts(spark, P), no_aqe(spark):
         while it < max_iter:
             t_it = _time.time()
-            parity = it % 2 if semi_sync else None
+            may_move = parity == F.lit(it % 2)
             it += 1
 
-            if counts is not None and total_msgs and \
-                    frontier_bound is not None and \
+            if counts is not None and \
                     frontier_bound > delta_msgs_frac * total_msgs:
                 # COST regression, not a mechanism limit: Σdeg(movers)
                 # grew past the fraction of 2m where the incremental
@@ -517,14 +687,14 @@ def label_propagation(
                 # table if it re-engages). A large mover count ALONE no
                 # longer aborts the path: above ``delta_bcast_max`` the
                 # movers side switches from a broadcast to a bucketed
-                # shuffle join (below), so multi-million-mover
+                # shuffle join (_apply_moves), so multi-million-mover
                 # supersteps — the sustained regime of a 100× graph —
                 # stay incremental as long as O(changed_edges) beats
                 # O(2m).
                 counts = None
 
+            # the ONE plan choice of the superstep
             if counts is not None:
-                # ---- incremental superstep over the counts table ----
                 if delta_from is None:
                     delta_from = it
                 if counts_fresh:
@@ -534,337 +704,29 @@ def label_propagation(
                     # again would double-count them
                     counts_fresh = False
                 elif changed_cnt > 0:
-                    movers = state.filter("changed").select(
-                        F.col("id").alias("dst"),
-                        F.col("prev").alias("old_lbl"),
-                        F.col("lbl").alias("new_lbl"),
-                    )
-                    if changed_cnt <= delta_bcast_max:
-                        # small mover set: zero-exchange broadcast join
-                        mside = F.broadcast(movers)
-                    else:
-                        # burst supersteps: ship the movers through one
-                        # hash(dst, P) exchange instead of a driver
-                        # broadcast; the CSR side is bucketed on dst so
-                        # only the (much smaller) movers side moves, and
-                        # a shuffle-hash hint keeps Spark from sorting
-                        # the bucketed CSR for a merge join
-                        mside = movers.repartition(P, "dst") \
-                            .hint("shuffle_hash")
-                    upd = (
-                        sym.join(mside, "dst")
-                        .select(
-                            F.explode("srcs").alias("id"),
-                            "old_lbl", "new_lbl",
-                        )
-                        .select(
-                            "id",
-                            F.explode(F.array(
-                                F.struct(
-                                    F.col("old_lbl").alias("lbl"),
-                                    F.lit(-1).cast("long").alias("cnt"),
-                                ),
-                                F.struct(
-                                    F.col("new_lbl").alias("lbl"),
-                                    F.lit(1).cast("long").alias("cnt"),
-                                ),
-                            )).alias("d"),
-                        )
-                        .select("id", "d.lbl", "d.cnt")
-                    )
-                    merged = (
-                        counts.select("id", "lbl", "cnt")
-                        .unionByName(upd)
-                        .repartition(P, "id")
-                        .groupBy("id", "lbl")
-                        .agg(F.sum("cnt").alias("cnt"))
-                        .filter(F.col("cnt") > 0)
-                    )
-                    counts, _ = counts_loop.step(merged, {})
-                # argmax over the maintained counts: both sides bucketed
-                # by id, zero exchange. Semi-sync: only active-parity
-                # listeners' argmax can act, so the counts side is
-                # parity-filtered up front — inactive rows fall out of
-                # ``best`` and pass through via the left join below
-                # (coalesce keeps their current label), exactly like the
-                # filtered full gather.
-                cnt_side = counts.select("id", "lbl", "cnt")
-                if parity is not None:
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    cnt_side = cnt_side.filter(pexpr == F.lit(parity))
-                j = cnt_side.join(
-                    state.select("id", F.col("lbl").alias("cur_lbl")), "id"
-                )
-                best = j.groupBy("id").agg(
-                    F.max(F.struct(
-                        F.col("cnt"),
-                        ((F.col("lbl") == F.col("cur_lbl")).cast("int")
-                         if sticky else F.lit(0)).alias("t1"),
-                        (-F.col("lbl")).alias("t2"),
-                        F.col("lbl").alias("lbl"),
-                    )).alias("_want")
-                ).select("id", F.col("_want.lbl").alias("want_lbl"))
-                base = state.select(
-                    "id", F.col("lbl").alias("cur_lbl"),
-                    F.col("changed").alias("pch"), "deg")
-                want = F.coalesce("want_lbl", F.col("cur_lbl"))
-                new_lbl = want
-                stepped = base.join(best, "id", "left").select(
-                    "id",
-                    new_lbl.alias("lbl"),
-                    (new_lbl != F.col("cur_lbl")).alias("changed"),
-                    (want != F.col("cur_lbl")).alias("wants"),
-                    F.col("pch").alias("prevch"),
-                    F.col("cur_lbl").alias("prev"),
-                    "deg",
-                )
+                    counts, _ = counts_loop.step(_apply_moves(
+                        sym, state, counts,
+                        changed_cnt <= delta_bcast_max, P), {})
+                stepped = _delta_plan(state, counts, may_move, sticky)
             elif it == 1 and simple1:
-                # ---- identity-init first superstep, min-neighbor plan ----
-                # The general plan's (listener, label) count aggregation
-                # peaks EXACTLY here — with identity labels its group
-                # cardinality is ~2m (near-zero map-side combining, the
-                # single most expensive superstep at web scale). Instead:
-                # every unique (listener, speaker) pair is a cnt-1 vote,
-                # so one n-group min aggregation with perfect partial
-                # combining yields the best single-vote candidate, and
-                # the (rare, exactly-counted) duplicated pairs get their
-                # true counts from only the rows that contain them. The
-                # min-agg re-lists a duplicated speaker as a weaker cnt-1
-                # candidate of the same label — harmless, its true
-                # (cnt>1) candidate dominates. Equivalence cases
-                # (self-loops beat cnt-1 neighbors via the sticky flag,
-                # duplicated > smaller-id single, isolated keep
-                # themselves) are pinned by
-                # test_lpa_first_superstep_fastpath and transitively by
-                # the lpa_full recursive-CTE oracle.
                 used_fast1 = True
-                # semi-sync: only active-parity listeners can act — the
-                # min-agg and dup-correction gathers keep only their
-                # messages (half the exchange); inactive rows fall to
-                # the want=cur degenerate case of the left join below
-                pfilter = None
-                if parity is not None:
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    pfilter = pexpr == F.lit(parity)
-                ugather = sym.select(
-                    F.col("dst").alias("spk"),
-                    F.explode("srcs").alias("id"),
-                )
-                if pfilter is not None:
-                    ugather = ugather.filter(pfilter)
-                uniq = (
-                    ugather
-                    .groupBy("id")
-                    .agg(
-                        F.min(
-                            F.when(F.col("spk") != F.col("id"), F.col("spk"))
-                        ).alias("mn"),
-                        F.max((F.col("spk") == F.col("id")).cast("int")
-                              ).alias("selfv"),
-                    )
-                )
-                best = uniq
-                if sym_dups:
-                    dgather = (
-                        sym.filter(
-                            F.size("srcs") != F.size(F.array_distinct("srcs"))
-                        )
-                        .select(
-                            F.col("dst").alias("spk"),
-                            F.explode("srcs").alias("id"),
-                        )
-                    )
-                    if pfilter is not None:
-                        dgather = dgather.filter(pfilter)
-                    dupc = (
-                        dgather
-                        .groupBy("id", "spk")
-                        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-                        .filter(F.col("cnt") > 1)
-                        .groupBy("id")
-                        .agg(F.max(F.struct(
-                            F.col("cnt"),
-                            (F.col("spk") == F.col("id")).cast("int")
-                            .alias("t1"),
-                            (-F.col("spk")).cast("long").alias("t2"),
-                            F.col("spk").alias("lbl"),
-                        )).alias("wd"))
-                    )
-                    best = uniq.join(dupc, "id", "left")
-                base = state.select(
-                    "id", F.col("lbl").alias("cur_lbl"),
-                    F.col("changed").alias("pch"), "deg")
-                joined = base.join(best, "id", "left")
-                cand_self = F.struct(
-                    F.coalesce(F.col("selfv"), F.lit(0)).cast("long")
-                    .alias("cnt"),
-                    F.lit(1).alias("t1"),
-                    (-F.col("cur_lbl")).cast("long").alias("t2"),
-                    F.col("cur_lbl").alias("lbl"),
-                )
-                cand_min = F.when(
-                    F.col("mn").isNotNull(),
-                    F.struct(
-                        F.lit(1).cast("long").alias("cnt"),
-                        F.lit(0).alias("t1"),
-                        (-F.col("mn")).cast("long").alias("t2"),
-                        F.col("mn").alias("lbl"),
-                    ),
-                )
-                cands = [cand_self, cand_min]
-                if sym_dups:
-                    cands.append(F.col("wd"))
-                # the parity gate already acted as the gather filter:
-                # filtered-out listeners have no uniq/dupc row, so their
-                # candidates degenerate to the self candidate (want=cur)
-                want = F.greatest(*cands).getField("lbl")
-                new_lbl = want
-                stepped = joined.select(
-                    "id",
-                    new_lbl.alias("lbl"),
-                    (new_lbl != F.col("cur_lbl")).alias("changed"),
-                    (want != F.col("cur_lbl")).alias("wants"),
-                    F.col("pch").alias("prevch"),
-                    F.col("cur_lbl").alias("prev"),
-                    "deg",
-                )
+                stepped = _first_superstep_plan(sym, state, may_move, sym_dups)
             else:
-                gather_sym = sym
-                active_set = None
-                if parity is not None:
-                    # semi-sync full gather: evaluate ONLY active-parity
-                    # listeners (lpa_superstep's listener_pred) — half
-                    # the exchange volume and agg cardinality of the
-                    # superstep's dominant stage; inactive rows pass
-                    # through the state left join below unchanged.
-                    # Frontier stale set = movers of the last TWO
-                    # supersteps (changed | prevch) plus their
-                    # neighbors: a vertex inactive at t re-evaluates at
-                    # t+1, so both supersteps' moves (multiset changes
-                    # AND the movers' own sticky-state changes) are
-                    # exactly what it missed; with the filter, every
-                    # evaluated wanter moves, so the old gated
-                    # (wants-and-not-changed) set is structurally empty.
-                    pexpr = parity_expr if parity_expr is not None \
-                        else F.pmod(F.xxhash64("id"), F.lit(2))
-                    small_frontier = (
-                        frontier
-                        and changed_cnt is not None
-                        and fbound2_cnt is not None
-                        and fbound2_cnt <= frontier_max
-                    )
-                    if small_frontier:
-                        movers = state.filter("changed or prevch").select("id")
-                        if csr:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.explode("srcs").alias("id"))
-                        else:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.col("src").alias("id"))
-                        active = nbrs.unionByName(movers).distinct()
-                        if csr:
-                            # CSR rows can't be pre-filtered by listener;
-                            # the broadcast filter applies post-explode
-                            active_set = active
-                        else:
-                            gather_sym = sym.join(
-                                F.broadcast(
-                                    active.withColumnRenamed("id", "src")),
-                                "src",
-                                "left_semi",
-                            )
-                    ev = lpa_superstep(
-                        gather_sym,
-                        state.select("id", "lbl"),
-                        sticky=sticky,
-                        active=active_set,
-                        listener_pred=pexpr == F.lit(parity),
-                        gather_parts=_gather_parts(it),
-                    ).select(
-                        "id",
-                        F.col("lbl").alias("ev_lbl"),
-                        F.col("changed").alias("ev_ch"),
-                    )
-                    stepped = state.select(
-                        "id", F.col("lbl").alias("cur_lbl"),
-                        F.col("changed").alias("pch"), "deg",
-                    ).join(ev, "id", "left").select(
-                        "id",
-                        F.coalesce("ev_lbl", F.col("cur_lbl")).alias("lbl"),
-                        F.coalesce("ev_ch", F.lit(False)).alias("changed"),
-                        F.coalesce("ev_ch", F.lit(False)).alias("wants"),
-                        F.col("pch").alias("prevch"),
-                        F.col("cur_lbl").alias("prev"),
-                        "deg",
-                    )
-                else:
-                    # sync schedule: every vertex evaluates every
-                    # superstep (no parity filter); frontier keeps the
-                    # one-superstep movers + gated would-be movers form
-                    small_frontier = (
-                        frontier
-                        and changed_cnt is not None
-                        and frontier_bound is not None
-                        and (frontier_bound + wants_cnt) <= frontier_max
-                    )
-                    if small_frontier:
-                        movers = state.filter("changed").select("id")
-                        gated = state.filter("wants and not changed").select("id")
-                        if csr:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.explode("srcs").alias("id"))
-                        else:
-                            nbrs = sym.join(
-                                F.broadcast(
-                                    movers.withColumnRenamed("id", "dst")),
-                                "dst", "left_semi",
-                            ).select(F.col("src").alias("id"))
-                        active = (
-                            nbrs.unionByName(movers).unionByName(gated)
-                            .distinct()
-                        )
-                        if csr:
-                            active_set = active
-                        else:
-                            gather_sym = sym.join(
-                                F.broadcast(
-                                    active.withColumnRenamed("id", "src")),
-                                "src",
-                                "left_semi",
-                            )
-
-                    stepped = lpa_superstep(
-                        gather_sym,
-                        state.select("id", "lbl"),
-                        sticky=sticky,
-                        active_parity=parity,
-                        parity_expr=parity_expr,
-                        active=active_set,
-                        gather_parts=_gather_parts(it),
-                    ).join(
-                        state.select(
-                            "id", F.col("lbl").alias("prev"),
-                            F.col("changed").alias("prevch"), "deg"), "id"
-                    )
+                small_frontier = (
+                    frontier
+                    and fbound2_cnt is not None
+                    and fbound2_cnt <= frontier_max
+                )
+                stepped = _gather_plan(
+                    sym, state, may_move, sticky, small_frontier,
+                    _gather_parts(it, total_msgs, P))
             state, got = loop.step(
                 stepped,
                 {
                     "changed": F.sum(F.col("changed").cast("long")),
-                    "wants": F.sum(F.col("wants").cast("long")),
-                    # bound on |active|: movers + their neighbors (+ the
-                    # sync schedule's gated set); fbound2 widens it to
-                    # the last TWO supersteps for the semi-sync frontier
+                    # bound on |active|: movers + their neighbors;
+                    # fbound2 widens it to the last TWO supersteps for
+                    # the frontier
                     "fbound": F.sum(
                         F.when(F.col("changed"), F.col("deg") + 1).otherwise(F.lit(0))
                     ),
@@ -877,39 +739,35 @@ def label_propagation(
                 },
             )
             changed_cnt = int(got.get("changed") or 0)
-            wants_cnt = int(got.get("wants") or 0)
             frontier_bound = int(got.get("fbound") or 0)
             fbound2_cnt = int(got.get("fbound2") or 0)
             changed_history.append(changed_cnt)
             iter_secs.append(_time.time() - t_it)
-            if parity is not None:
-                # one quiet superstep certifies only one parity; two in
-                # a row evaluate BOTH parities on the same labeling —
-                # a true fixpoint (and with the listener filter, an
-                # inactive vertex's would-be move is simply its move one
-                # superstep later, so this never stops early)
-                if changed_cnt == 0 and prev_changed_cnt == 0:
-                    break
-            elif changed_cnt == 0 and wants_cnt == 0:
+            # one quiet superstep certifies only one parity; two in
+            # a row evaluate BOTH parities on the same labeling —
+            # a true fixpoint (and with the listener filter, an
+            # inactive vertex's would-be move is simply its move one
+            # superstep later, so this never stops early)
+            if changed_cnt == 0 and prev_changed_cnt == 0:
                 break
             prev_changed_cnt = changed_cnt
-            if delta_ok and counts is None:
-                if frontier_bound + wants_cnt <= delta_msgs_frac * total_msgs:
-                    # engage: ONE full gather builds the counts table
-                    if counts_loop is None:
-                        counts_loop = StateLoop(
-                            spark, f"{state_name}_cnt", mode="tables",
-                            bucket_key="id", parts=P)
-                    gather0 = sym.join(
-                        state.select(F.col("id").alias("dst"), "lbl"), "dst"
-                    ).select(F.explode("srcs").alias("id"), "lbl")
-                    counts = counts_loop.init(
-                        gather0.repartition(P, "id")
-                        .groupBy("id", "lbl")
-                        .agg(F.count(F.lit(1)).alias("cnt")),
-                        start_iter=it,
-                    )
-                    counts_fresh = True
+            if delta and csr and counts is None and \
+                    frontier_bound + changed_cnt <= delta_msgs_frac * total_msgs:
+                # engage: ONE full gather builds the counts table
+                if counts_loop is None:
+                    counts_loop = StateLoop(
+                        spark, f"{state_name}_cnt", mode="tables",
+                        bucket_key="id", parts=P)
+                gather0 = sym.join(
+                    state.select(F.col("id").alias("dst"), "lbl"), "dst"
+                ).select(F.explode("srcs").alias("id"), "lbl")
+                counts = counts_loop.init(
+                    gather0.repartition(P, "id")
+                    .groupBy("id", "lbl")
+                    .agg(F.count(F.lit(1)).alias("cnt")),
+                    start_iter=it,
+                )
+                counts_fresh = True
 
     if mode != "tables":
         sym.unpersist()

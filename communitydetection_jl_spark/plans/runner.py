@@ -11,22 +11,22 @@ Layout under ``root``::
         manifest.json            run metadata (algorithm, params, seed)
         metrics.jsonl            one line per iteration: {"iter": k, ...}
         <name>/iter=K/           parquet snapshot of the state DataFrame
+        state/<name>/iter=K/     StateLoop's per-iteration state (dir mode)
 
 Snapshots are plain parquet (partition-preserving, readable by any
-executor count); ``load_latest`` returns the newest snapshot so a new
-driver process continues from iteration K+1. Algorithms accept a
-``ledger=`` parameter and call ``record`` / ``maybe_snapshot`` — see
-operators/pagerank.py, operators/lpa.py.
+executor count). Algorithms accept a ``ledger=`` parameter; their
+StateLoop (plans/iterstate.py) keeps its state under ``state/`` and
+reopens the newest iteration, so a new driver process continues
+from iteration K+1 — see operators/pagerank.py, operators/lpa.py.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 class RunLedger:
@@ -70,19 +70,3 @@ class RunLedger:
 
     def snapshot(self, name: str, iteration: int, df: DataFrame) -> None:
         df.write.mode("overwrite").parquet(self._snap_dir(name, iteration))
-
-    def load_latest(self, name: str, spark: SparkSession | None = None):
-        """Return (iteration, DataFrame) of the newest snapshot, or None."""
-        base = os.path.join(self.dir, name)
-        if not os.path.isdir(base):
-            return None
-        iters = []
-        for d in os.listdir(base):
-            m = re.fullmatch(r"iter=(\d+)", d)
-            if m and os.path.exists(os.path.join(base, d, "_SUCCESS")):
-                iters.append(int(m.group(1)))
-        if not iters:
-            return None
-        it = max(iters)
-        spark = spark or SparkSession.getActiveSession()
-        return it, spark.read.parquet(self._snap_dir(name, it))

@@ -187,7 +187,8 @@ def _write_cluster_section(report, rows, small_c, big_c) -> None:
     text = open(path).read() if os.path.exists(path) else ""
     if CLUSTER_START in text and CLUSTER_END in text:
         pre = text[: text.index(CLUSTER_START)]
-        post = text[text.index(CLUSTER_END) + len(CLUSTER_END):].lstrip("\n")
+        # exactly one blank line between the block and what follows
+        post = "\n" + text[text.index(CLUSTER_END) + len(CLUSTER_END):].lstrip("\n")
         text = pre + block + post
     else:
         marker = "## Deployment / resume check"

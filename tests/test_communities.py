@@ -17,7 +17,12 @@ from communitydetection_jl_spark.operators.compare import (
     rand_index,
 )
 from communitydetection_jl_spark.operators.louvain import _local_louvain, louvain
-from communitydetection_jl_spark.operators.lpa import lpa, nsdlpa, permute_labels
+from communitydetection_jl_spark.operators.lpa import (
+    label_propagation,
+    lpa,
+    nsdlpa,
+    permute_labels,
+)
 from communitydetection_jl_spark.operators.modularity import modularity
 from communitydetection_jl_spark.operators.multilevel import hlpa
 from communitydetection_jl_spark.sources import fixtures as fx
@@ -418,6 +423,58 @@ def test_lpa_strategy_invariance(spark):
             for k, v in runs.items()
         }
         assert labels["dir"] == labels["bare"] == labels["frontier"] == labels["delta"], name
+
+
+def test_lpa_gather_widening_exact(spark, monkeypatch):
+    """The peak-diversity gather widening (a wider exchange for the
+    first full gathers) is pure execution strategy. A per-task group
+    budget of 10 makes _gather_parts widen through its real rule on a
+    test-sized graph; a spy on lpa_superstep proves a widened exchange
+    actually ran in both state modes, and the mover history and labels
+    must equal an unwidened run."""
+    from communitydetection_jl_spark.operators import lpa as lpa_mod
+
+    edges, _ = fx.ring_of_cliques(spark)
+    P = spark.sparkContext.defaultParallelism
+    for mode in ("dir", "tables"):
+        base = lpa(edges, max_iter=30, mode=mode, state_name=f"lpa_gw0_{mode}")
+        seen = []
+        orig = lpa_mod.lpa_superstep
+
+        def spy(*a, **kw):
+            seen.append(kw.get("gather_parts"))
+            return orig(*a, **kw)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(lpa_mod, "_GATHER_GROUP_BUDGET", 10)
+            mp.setattr(lpa_mod, "lpa_superstep", spy)
+            wide = lpa(edges, max_iter=30, mode=mode, state_name=f"lpa_gw1_{mode}")
+        assert any(g is not None and g > P for g in seen), (mode, seen)
+        assert wide.changed_history == base.changed_history, mode
+        assert {(r.id, r.comm) for r in wide.labels.collect()} == {
+            (r.id, r.comm) for r in base.labels.collect()
+        }, mode
+
+
+def test_lpa_state_covers_self_loop_only_vertices(spark):
+    """The state is built from the symmetrized vote view, so a vertex
+    whose only edge is a self-loop must still get a label in every
+    vote mode — including nsdlpa, whose common-neighbor view drops
+    self-loops."""
+    rows = [(1, 2), (2, 3), (3, 1), (4, 4)]
+    edges = spark.createDataFrame(rows, "src long, dst long")
+    runs = {
+        "lpa": lpa(edges, max_iter=10),
+        "weighted": label_propagation(edges.withColumn("weight", F.lit(2.0)),
+                                      weighted=True, max_iter=10),
+        "nsdlpa": nsdlpa(edges, max_iter=10),
+        "tables": lpa(edges, max_iter=10, mode="tables",
+                      state_name="lpa_loop_only"),
+    }
+    for name, res in runs.items():
+        got = {r.id: r.comm for r in res.labels.collect()}
+        assert set(got) == {1, 2, 3, 4}, name
+        assert got[1] == got[2] == got[3] != got[4], name
 
 
 def test_louvain_gain_floor_stop(spark):
