@@ -134,7 +134,7 @@ def csr_adjacency(
     a null degree and chunk 0. The chunk groupBy and a downstream
     bucket-by-``key`` write ride the exchange's hash(key) partitioning
     with no further exchange. Earlier forms, A/B'd at the 163M-arc
-    bench corpus (scripts/profile_csr.py, multiset-identical outputs):
+    bench corpus (multiset-identical outputs):
     full degree-agg + join 73.5s; window-degree
     (count().over(Window.partitionBy(key))) 39.5s — but the window
     SORTS all 2m exchanged rows just to learn degrees that are almost

@@ -42,8 +42,6 @@ physical plan changed), so round counts and results match exactly.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -94,14 +92,11 @@ def connected_components(
     (plans/iterstate.py discipline)."""
     spark = edges.sparkSession
     verts = vertices_of(edges)
-    # fixed bucket/shuffle granularity across cluster sizes, same
-    # discipline as pagerank.py: finer-than-core tasks load-balance
-    # the skewed star joins and keep the bucketed reads zero-exchange
-    P = int(os.environ.get("SPARK_GRAFT_STATE_PARTS", "0")) or \
-        spark.sparkContext.defaultParallelism
-    loop = StateLoop(
-        spark, "cc_pairs", mode=mode, bucket_key="a", parts=P, ledger=ledger
-    )
+    loop = StateLoop(spark, "cc_pairs", mode=mode, bucket_key="a", ledger=ledger)
+    # fixed bucket/shuffle granularity across cluster sizes (see
+    # StateLoop): finer-than-core tasks load-balance the skewed star
+    # joins and keep the bucketed reads zero-exchange
+    P = loop.parts
 
     state = None
     if ledger is not None:

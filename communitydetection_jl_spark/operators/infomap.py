@@ -281,13 +281,14 @@ def _distributed_level(arcs: DataFrame, flows: DataFrame, eps: float,
         memb = loop.init(verts.select("id", F.col("id").alias("comm")))
         n = memb.count()
         flows.count()
-        # symmetrized arc-prob view, materialized ONCE per level (the
-        # per-sweep rebuild re-unioned + re-shuffled 2m rows per sweep)
-        sym = materialize_iter(
+        # symmetrized arc-prob view, materialized ONCE per level as the
+        # loop's side relation (the per-sweep rebuild re-unioned +
+        # re-shuffled 2m rows per sweep)
+        sym = loop.side(
             arcs.select("src", "dst", "t").unionByName(
                 arcs.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst"), "t")
-            ).repartition(parts, "dst")
+            ).repartition(parts, "dst"), "dst"
         )
         for sweep in range(max_sweeps):
             memb, got = loop.step(
@@ -307,9 +308,8 @@ def _distributed_level(arcs: DataFrame, flows: DataFrame, eps: float,
             else:
                 low_streak = 0
     flows.unpersist()
-    # sym is materialize_iter'd (cached) once per level — unpersist with
-    # flows or the hierarchy accumulates one 2m-row cached view per level
-    sym.unpersist()
+    # releases sym too, or the hierarchy accumulates one 2m-row side
+    # relation per level
     loop.cleanup(keep_final=True)
     return memb.select("id", "comm")
 

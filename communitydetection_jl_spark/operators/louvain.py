@@ -559,7 +559,7 @@ def _distributed_level(edges: DataFrame, eps: float, max_sweeps: int,
     the genuinely-improving level 0 runs its full 30; see
     BENCH/BASELINE.md round-4 note). ``None`` disables (the
     louvain_det oracle path pins the pure two-quiet-sweeps rule)."""
-    from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts, state_codec
+    from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts
 
     spark = edges.sparkSession
     verts = vertices_of(edges)
@@ -610,31 +610,15 @@ def _distributed_level(edges: DataFrame, eps: float, max_sweeps: int,
         aux.count()
         # symmetrized self-loop-free weighted view, materialized ONCE
         # per level (the per-sweep rebuild shuffled all 2m rows into the
-        # membership join EVERY sweep); bucketed on dst in tables mode
-        # so that join is exchange-free on the 2m side for every sweep
-        # of the level — the LPA side-table discipline (lpa.py:336)
+        # membership join EVERY sweep) as the loop's side relation:
+        # bucketed on dst in tables mode so that join is exchange-free
+        # on the 2m side for every sweep of the level
         ew = with_weight(edges).select("src", "dst", "weight")
         enl = ew.filter(F.col("src") != F.col("dst"))
-        sym_plan = enl.unionByName(
+        sym = loop.side(enl.unionByName(
             enl.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                        "weight")
-        )
-        sym_table = None
-        if mode == "tables":
-            sym_table = f"{loop.name}_sym"
-            loop._drop_table(sym_table)
-            w = sym_plan.repartition(parts, "dst").write
-            if state_codec():
-                w = w.option("compression", state_codec())
-            w.bucketBy(parts, "dst").mode("overwrite").saveAsTable(sym_table)
-            sym = spark.table(sym_table)
-        else:
-            # dir mode: localCheckpointed + cached once per level (the
-            # view is block-manager-resident, not file-backed; real
-            # materialized size stats via materialize_iter); the
-            # partitioning hint survives the checkpoint and the
-            # per-sweep union+weight recompute is gone
-            sym = materialize_iter(sym_plan.repartition(parts, "dst"))
+        ).repartition(parts, "dst"), "dst")
         selfw = None
         if setbased:
             selfw = (
@@ -684,15 +668,10 @@ def _distributed_level(edges: DataFrame, eps: float, max_sweeps: int,
                     low_streak = 0
     info["sweep_seconds"] = [round(t, 3) for t in loop.timings]
     aux.unpersist()
-    if sym_table is not None:
-        loop._drop_table(sym_table)
-    else:
-        # dir mode: the materialize_iter'd sym view is cached — drop it
-        # with the level's other side frames or multi-level runs pile up
-        # max_levels 2m-row cached datasets in the block manager
-        sym.unpersist()
     if selfw is not None:
         selfw.unpersist()
+    # releases sym too, or multi-level runs pile up one 2m-row side
+    # relation per level
     loop.cleanup(keep_final=True)
     return memb.select("id", "comm"), info
 

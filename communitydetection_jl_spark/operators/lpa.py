@@ -69,7 +69,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.graph import csr_adjacency, with_weight
-from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts, state_codec
+from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts
 from .triangles import edge_common_neighbors
 
 # Peak-diversity gather widening (_gather_parts): the per-task
@@ -523,7 +523,10 @@ def label_propagation(
     sticky tie-breaking (a vertex whose vote multiset is unchanged
     keeps its label).
 
-    ``delta=True`` (unit-vote CSR tables mode only) switches mid-run to
+    ``mode`` picks where state and the vote view are stored
+    (plans/iterstate.py); both modes run the same plans.
+
+    ``delta=True`` (unit votes only) switches mid-run to
     the INCREMENTAL superstep: a bucketed (id, lbl, cnt) neighbor-label
     count table is maintained from the movers' adjacency only — per
     mover v, every listener u of v gets cnt(u, old_lbl) −= 1,
@@ -537,8 +540,8 @@ def label_propagation(
     consolidate, so the switch is gated on the OBSERVED mover-degree
     bound (the same fbound metric that gates the frontier broadcast):
     engage when Σ(deg+1 of movers) + movers ≤ ``delta_msgs_frac``·2m.
-    Movers up to ``delta_bcast_max`` are broadcast to the bucketed CSR
-    table (zero exchange); ABOVE the cap they instead take one bucketed
+    Movers up to ``delta_bcast_max`` are broadcast to the CSR view
+    (zero exchange); ABOVE the cap they instead take one bucketed
     hash(dst, P) shuffle join — the 100×-scale path, where a graph can
     sustain multi-million-mover supersteps for which O(changed_edges)
     still beats O(2m) — and the path only drops back to the full gather
@@ -548,64 +551,45 @@ def label_propagation(
     1e7-in-degree web hub would hold a 1e7-entry map in one row — the
     unbounded-row failure the CSR chunk cap exists to prevent."""
     spark = edges.sparkSession
-    import os as _os
-
-    # fixed partition/bucket count across cluster sizes (see pagerank)
-    P = int(_os.environ.get("SPARK_GRAFT_STATE_PARTS", "0")) or \
-        spark.sparkContext.defaultParallelism
     loop = StateLoop(spark, state_name, mode=mode, bucket_key="id",
-                     parts=P, ledger=ledger)
+                     ledger=ledger)
+    # fixed partition/bucket count across cluster sizes (see StateLoop)
+    P = loop.parts
 
     sym_plan = _vote_edges(edges, weighted, cn_bonus)
     unit = "vote" not in sym_plan.columns
-    sym_table = None
-    sym_dups = None
+    sym_obs = Observation(f"{loop.name}_sym")
+    if unit:
+        # CSR speaker view (dst, srcs): halves gather bytes. Hub rows
+        # are chunked at ~64k neighbors (csr_adjacency) so no single
+        # row ever holds a web-hub's full in-link list; the gather
+        # explodes the arrays, so chunking is invisible to the
+        # superstep semantics (lpa_full oracle pins this).
+        # csr_adjacency(parts=P) already lands on hash(dst, P).
+        sym_plan = csr_adjacency(sym_plan, "dst", "src", "srcs", parts=P)
+        # exact duplicate-(listener, speaker) count, observed free on
+        # the build: csr_adjacency buckets chunk rows by
+        # pmod(xxhash64(src), nchunks), so every duplicate of a
+        # listener lands in the SAME chunk row and a per-row
+        # array_distinct sees all of them. dups == 0 certifies the
+        # identity-init first-superstep fast path below.
+        sym_plan = sym_plan.observe(
+            sym_obs,
+            F.coalesce(
+                F.sum(F.size("srcs") - F.size(F.array_distinct("srcs"))),
+                F.lit(0),
+            ).alias("dups"),
+            F.coalesce(F.sum(F.size("srcs")), F.lit(0)).alias("msgs"),
+        )
+    else:
+        sym_plan = sym_plan.repartition(P, "dst").observe(
+            sym_obs, F.count(F.lit(1)).alias("msgs"))
+    sym = loop.side(sym_plan, "dst")
     # total_msgs = Σdeg = 2m, the message count of one full gather (the
     # delta gate's denominator), taken from the build job itself
-    if mode == "tables":
-        sym_table = f"{loop.name}_sym"
-        loop._drop_table(sym_table)
-        sym_obs = Observation(f"{loop.name}_sym")
-        if unit:
-            # CSR speaker table (dst, srcs): halves gather bytes.
-            # Hub rows are chunked at ~64k neighbors (csr_adjacency) so
-            # no single row ever holds a web-hub's full in-link list;
-            # the gather explodes the arrays, so chunking is invisible
-            # to the superstep semantics (lpa_full oracle pins this).
-            sym_plan = csr_adjacency(sym_plan, "dst", "src", "srcs", parts=P)
-            # exact duplicate-(listener, speaker) count, observed free
-            # on the build write: csr_adjacency buckets chunk rows by
-            # pmod(xxhash64(src), nchunks), so every duplicate of a
-            # listener lands in the SAME chunk row and a per-row
-            # array_distinct sees all of them. dups == 0 certifies the
-            # identity-init first-superstep fast path below.
-            sym_plan = sym_plan.observe(
-                sym_obs,
-                F.coalesce(
-                    F.sum(F.size("srcs") - F.size(F.array_distinct("srcs"))),
-                    F.lit(0),
-                ).alias("dups"),
-                F.coalesce(F.sum(F.size("srcs")), F.lit(0)).alias("msgs"),
-            )
-        else:
-            sym_plan = sym_plan.observe(
-                sym_obs, F.count(F.lit(1)).alias("msgs"))
-        # the CSR branch already lands on hash(dst, P) via
-        # csr_adjacency(parts=P) — repartitioning again would move the
-        # full array data through a second exchange
-        w = (sym_plan if unit else sym_plan.repartition(P, "dst")).write
-        if state_codec():
-            w = w.option("compression", state_codec())
-        w.bucketBy(P, "dst").mode("overwrite").saveAsTable(sym_table)
-        got_sym = sym_obs.get
-        total_msgs = int(got_sym["msgs"])
-        if unit:
-            sym_dups = int(got_sym["dups"])
-        sym = spark.table(sym_table)
-    else:
-        sym = sym_plan.repartition(P, "dst").persist()
-        total_msgs = sym.count()
-    csr = "srcs" in sym.columns
+    got_sym = sym_obs.get
+    total_msgs = int(got_sym["msgs"])
+    sym_dups = int(got_sym["dups"]) if unit else None
 
     state = None
     if ledger is not None:
@@ -622,7 +606,7 @@ def label_propagation(
         # The symmetrized view's speaker keys ARE the vertex set and
         # listener degree == speaker degree, so the whole state init is
         # ONE n-row agg on sym (zero exchange on the bucketed CSR table)
-        if csr:
+        if unit:
             deg = F.sum(F.size("srcs")).cast("long")
         else:
             deg = F.count(F.lit(1))
@@ -657,11 +641,10 @@ def label_propagation(
     # the few rows that contain them. EXACT for any input; engaged only
     # while the dup mass is small (above ~2% the dup rows approach the
     # general gather's cost anyway). Requires a fresh identity start
-    # (not resumed) under sticky tie-breaking; sym_dups is only
-    # observed on the CSR build.
+    # (not resumed) under sticky tie-breaking and unit votes (sym_dups
+    # is observed on the CSR build).
     simple1 = (
-        sticky and start_iter == 0
-        and sym_dups is not None
+        sticky and start_iter == 0 and unit
         and sym_dups <= 0.02 * max(total_msgs, 1)
     )
     used_fast1 = False
@@ -751,12 +734,12 @@ def label_propagation(
             if changed_cnt == 0 and prev_changed_cnt == 0:
                 break
             prev_changed_cnt = changed_cnt
-            if delta and csr and counts is None and \
+            if delta and unit and counts is None and \
                     frontier_bound + changed_cnt <= delta_msgs_frac * total_msgs:
                 # engage: ONE full gather builds the counts table
                 if counts_loop is None:
                     counts_loop = StateLoop(
-                        spark, f"{state_name}_cnt", mode="tables",
+                        spark, f"{state_name}_cnt", mode=mode,
                         bucket_key="id", parts=P)
                 gather0 = sym.join(
                     state.select(F.col("id").alias("dst"), "lbl"), "dst"
@@ -769,10 +752,6 @@ def label_propagation(
                 )
                 counts_fresh = True
 
-    if mode != "tables":
-        sym.unpersist()
-    else:
-        loop._drop_table(sym_table)
     out = state.select("id", F.col("lbl").alias("comm"))
     if renumber:
         out = permute_labels(out)

@@ -13,17 +13,17 @@ dangling mass redistributed uniformly; ``damping`` below is d.
 Convergence: L1 norm Σ|p'-p| ≤ tol (reference default sqrt(eps) ≈
 1.49e-8, max 1000 iterations).
 
-Execution discipline (profiled at 54M arcs, scripts/profile_pagerank.py
-and plans/iterstate.py):
+Execution discipline (profiled at 54M arcs, plans/iterstate.py):
  - per iteration ONE Spark action: the state parquet/bucketed-table
    write; the L1 delta and the NEXT iteration's dangling mass ride on
    the same job as ``observe()`` metrics;
  - the dangling mass enters the plan as a *literal* (it was observed
    on the previous write) — no per-iteration broadcast subquery, no
    semi-join; dangling is derived from the state's out-degree column;
- - arcs: hash-partitioned by src (cached, or a bucketed table in
-   mode="tables" so both per-iteration joins are co-partitioned with
-   zero exchange on the wide side);
+ - arcs: hash-partitioned by src and materialized once as the state
+   loop's side relation (cached, or a bucketed table in mode="tables"
+   so both per-iteration joins are co-partitioned with zero exchange
+   on the wide side);
  - **constant-weight fast path**: when every arc has the same weight
    (the web link-graph case — trans prob is then exactly 1/outdeg),
    the arc table is a bare (src, dst) pair list — no per-arc double —
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.graph import csr_adjacency
-from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts, state_codec
+from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts
 from .degrees import trans_prob_directed
 
 
@@ -85,18 +85,10 @@ def pagerank(
     """
     spark = edges.sparkSession
     tau = 1.0 - damping
-    import os as _os
-
-    # partition/bucket count for arcs+state: fixing it ABOVE the core
-    # count (e.g. 64 on both scaling legs) keeps task granularity
-    # constant across cluster sizes — finer tasks load-balance the
-    # skewed gather and the same bucket count keeps every join
-    # zero-exchange at any parallelism
-    P = int(_os.environ.get("SPARK_GRAFT_STATE_PARTS", "0")) or \
-        spark.sparkContext.defaultParallelism
-
     loop = StateLoop(spark, "pr_state", mode=mode, bucket_key="id",
-                     parts=P, ledger=ledger)
+                     ledger=ledger)
+    # partition/bucket count for arcs+state (see StateLoop)
+    P = loop.parts
 
     uniform = _is_constant_weight(edges)
     if uniform:
@@ -123,21 +115,8 @@ def pagerank(
             payload=F.struct("dst", "tp"),
             parts=P,
         )
-    arcs_table = None
-    if mode == "tables":
-        arcs_table = f"{loop.name}_arcs"
-        loop._drop_table(arcs_table)
-        # csr_adjacency(parts=P) already lands on hash(src, P): the
-        # bucketed write gets one file per bucket with no repartition
-        w = arcs_plan.write
-        if state_codec():
-            w = w.option("compression", state_codec())
-        w.bucketBy(P, "src").mode("overwrite").saveAsTable(arcs_table)
-        arcs = spark.table(arcs_table)
-    else:
-        arcs = arcs_plan.persist()
-        arcs.count()
-
+    # csr_adjacency(parts=P) already lands on hash(src, P)
+    arcs = loop.side(arcs_plan, "src")
     adj_col = "dsts" if uniform else "nbrs"
 
     state = None
@@ -262,12 +241,7 @@ def pagerank(
             deltas.append(delta)
 
     out = state.select("id", F.col("p").alias("pagerank"))
-    if mode != "tables":
-        arcs.unpersist()
-    else:
-        loop._drop_table(arcs_table)
-    # NOTE: state files (and tables) for the final iteration back the
-    # returned DataFrame; only scratch dirs without a ledger are
-    # removed by cleanup(keep_final=True) -> no-op here.
+    # releases the arcs; the final iteration's state files (or table)
+    # back the returned DataFrame and are kept
     loop.cleanup(keep_final=True)
     return PageRankResult(out, it, delta, deltas, list(loop.timings))

@@ -158,15 +158,14 @@ def slpa(
     the ENTIRE run — T speak/listen/append rounds plus post-processing
     — is bit-reproducible in ANSI SQL (the driver's slpa oracle)."""
     spark = edges.sparkSession
-    sym = (
+    loop = StateLoop(spark, "slpa_memory", bucket_key="id", ledger=ledger)
+    sym = loop.side(
         symmetrize(with_weight(edges))
         .select("src", "dst")
-        .repartition("dst")
-        .persist()
+        .repartition(loop.parts, "dst"),
+        "dst",
     )
-    sym.count()
     verts = vertices_of(edges)
-    loop = StateLoop(spark, "slpa_memory", bucket_key="id", ledger=ledger)
     memory = None
     if ledger is not None:
         memory = loop.resume()
@@ -211,6 +210,5 @@ def slpa(
 
     cover = final_mem.groupBy("label").agg(F.sort_array(F.collect_list("id")).alias("members"))
     membership = argmax.select("id", F.col("label").alias("comm"))
-    sym.unpersist()
     loop.cleanup(keep_final=True)
     return SLPAResult(final_mem, cover, membership, iterations, history)

@@ -1,8 +1,8 @@
 """Materialization backend for iterative vertex-state loops.
 
-Every iterative operator (PageRank, LPA, connected components, Louvain
-supersteps) follows one discipline, found by profiling at 54M edges
-(scripts/profile_pagerank.py):
+Every iterative operator (PageRank, LPA, connected components, Louvain,
+Infomap and SLPA supersteps) follows one discipline, found by profiling
+at 54M edges:
 
   * per iteration, exactly ONE Spark action: a parquet write of the new
     state with convergence scalars attached as ``observe()`` metrics
@@ -13,13 +13,18 @@ supersteps) follows one discipline, found by profiling at 54M edges
     row objects per iteration and stalls the JVM in GC), real file
     statistics for the next plan, and the written state IS the resume
     snapshot (north-rule checkpoint ledger);
-  * optionally, state lives in a bucketed table so the per-iteration
-    joins against a bucketed edge/arc table are co-partitioned with
-    ZERO exchange on the wide side (one narrow shuffle per superstep).
+  * the run's static side relation (CSR arcs, vote view, symmetrized
+    edges) is materialized once through ``StateLoop.side`` — the one
+    place the storage mode decides how;
+  * optionally, state and side relations live in bucketed tables so
+    the per-iteration joins are co-partitioned with ZERO exchange on
+    the wide side (one narrow shuffle per superstep).
 
-Measured (200k-page corpus x64 replicas = 54M arcs, steady-state
-superstep): naive localCheckpoint loop 9.6s, parquet round-trip 2.6s,
-bucketed tables 2.2s at local[16]; overhead floor 0.55s/iter.
+The storage ``mode`` picks where data lives, never which plan an
+operator runs. Measured (200k-page corpus x64 replicas = 54M arcs,
+steady-state superstep): naive localCheckpoint loop 9.6s, parquet
+round-trip 2.6s, bucketed tables 2.2s at local[16]; overhead floor
+0.55s/iter.
 """
 
 from __future__ import annotations
@@ -36,25 +41,15 @@ from pyspark.sql import functions as F
 _LOOP_IDS = itertools.count()
 
 
-def state_codec() -> str | None:
-    """Parquet codec for the engine's THROWAWAY state/CSR tables
-    (``SPARK_GRAFT_STATE_CODEC``; empty = Spark's default snappy).
-
-    State tables live for one superstep (or one algorithm run) in a
-    scratch/tmpfs warehouse, so the codec trade here is pure write+read
-    CPU against scratch bytes — durability and network replication,
-    the reasons to compress long-lived tables, don't apply. Scoped as a
-    per-write option so user-facing outputs keep the session default."""
-    c = os.environ.get("SPARK_GRAFT_STATE_CODEC", "").strip().lower()
-    return c or None
-
-
 def tune_for_iteration(spark: SparkSession) -> None:
     """Idempotent write-path tuning: v2 committer (no serial rename
-    pass), no _SUCCESS markers, no parquet summary files."""
+    pass), no parquet summary files. The v2 committer moves task output
+    straight into the target, so a killed job leaves a partial
+    directory; the ``_SUCCESS`` marker, written at job commit, is what
+    tells a complete state snapshot from a half-written one."""
     hc = spark.sparkContext._jsc.hadoopConfiguration()
     hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
-    hc.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+    hc.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "true")
     hc.set("parquet.summary.metadata.level", "NONE")
 
 
@@ -97,12 +92,24 @@ class shuffle_parts:
 
 
 class StateLoop:
-    """Owns the materialized per-iteration state of one algorithm run.
+    """Owns the materialized per-iteration state of one algorithm run,
+    and its static side relations (``side``).
 
-    mode="dir":    state parquet under a scratch (or ledger) directory.
+    ``mode`` picks storage only — an operator runs the same plans in
+    both modes:
+
+    mode="dir":    state parquet under a scratch (or ledger) directory,
+                   resumable; side relations are cached.
     mode="tables": bucketed managed tables (alternating names); joins
-                   against same-bucketed relations need no exchange.
+                   against same-bucketed side tables need no exchange.
                    Requires a writable spark.sql.warehouse.dir.
+
+    ``parts`` (the bucket and state partition count) defaults to
+    ``$SPARK_GRAFT_STATE_PARTS``, else the default parallelism. Fixing it
+    ABOVE the core count (e.g. 64 on both scaling legs) keeps task
+    granularity constant across cluster sizes — finer tasks
+    load-balance skewed gathers and the same bucket count keeps every
+    join zero-exchange at any parallelism.
     """
 
     def __init__(
@@ -119,7 +126,8 @@ class StateLoop:
         self.spark = spark
         self.mode = mode
         self.bucket_key = bucket_key
-        self.parts = parts or spark.sparkContext.defaultParallelism
+        self.parts = (parts or int(os.environ.get("SPARK_GRAFT_STATE_PARTS", "0"))
+                      or spark.sparkContext.defaultParallelism)
         self.ledger = ledger
         self.keep_last = max(keep_last, 2)
         self.iteration = 0
@@ -141,6 +149,7 @@ class StateLoop:
                 self.dir = tempfile.mkdtemp(prefix=f"{self.name}_", dir=base)
         self._schema = None
         self._cur: DataFrame | None = None
+        self._sides: list = []  # side tables (tables) / cached frames (dir)
         self.timings: list[float] = []  # wall seconds per step()
 
     # -- internals -------------------------------------------------------
@@ -169,20 +178,14 @@ class StateLoop:
             shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
 
     def _write(self, df: DataFrame, target: str) -> None:
-        codec = state_codec()
         if self.mode == "tables":
             self._drop_table(target)
             w = df.write
-            if codec:
-                w = w.option("compression", codec)
             if self.bucket_key:
                 w = w.bucketBy(self.parts, self.bucket_key)
             w.mode("overwrite").saveAsTable(target)
         else:
-            w = df.write
-            if codec:
-                w = w.option("compression", codec)
-            w.mode("overwrite").parquet(target)
+            df.write.mode("overwrite").parquet(target)
 
     def _read(self, target: str) -> DataFrame:
         if self.mode == "tables":
@@ -197,6 +200,25 @@ class StateLoop:
         return os.path.join(self.dir, f"iter={iteration}")
 
     # -- API ---------------------------------------------------------------
+    def side(self, plan: DataFrame, key: str) -> DataFrame:
+        """Materialize a static relation of the run (CSR arcs, vote
+        view, symmetrized edges) once, in the loop's mode; ``plan`` must
+        already be hash-partitioned on ``key`` into ``self.parts``.
+        Tables mode writes a table bucketed on ``key`` (one file per
+        bucket, no repartition); dir mode caches it. Metrics observed
+        on ``plan`` are filled by this build job. ``cleanup`` releases
+        it."""
+        if self.mode == "tables":
+            t = f"{self.name}_side{len(self._sides)}"
+            self._drop_table(t)
+            plan.write.bucketBy(self.parts, key).mode("overwrite").saveAsTable(t)
+            self._sides.append(t)
+            return self.spark.table(t)
+        df = plan.persist()
+        df.count()
+        self._sides.append(df)
+        return df
+
     def init(self, df: DataFrame, start_iter: int = 0) -> DataFrame:
         """Materialize the initial state; returns the readable state."""
         self.iteration = start_iter
@@ -209,14 +231,17 @@ class StateLoop:
         return self._cur
 
     def resume(self) -> DataFrame | None:
-        """Dir mode: reopen the newest iter=K state written by a prior
-        run (mid-algorithm resume)."""
+        """Dir mode: reopen the newest complete iter=K state written by
+        a prior run (mid-algorithm resume). A directory without the
+        job-commit ``_SUCCESS`` marker was cut mid-write and is
+        skipped."""
         if self.mode == "tables" or not os.path.isdir(self.dir):
             return None
         iters = sorted(
             int(d.split("=", 1)[1])
             for d in os.listdir(self.dir)
             if d.startswith("iter=")
+            and os.path.exists(os.path.join(self.dir, d, "_SUCCESS"))
         )
         if not iters:
             return None
@@ -256,6 +281,14 @@ class StateLoop:
         return self._cur, got
 
     def cleanup(self, keep_final: bool = False) -> None:
+        """Release the side relations, and the state except (with
+        ``keep_final``) the final one backing the returned frame."""
+        for side in self._sides:
+            if self.mode == "tables":
+                self._drop_table(side)
+            else:
+                side.unpersist()
+        self._sides = []
         if self.mode == "tables":
             final = self._target(self.iteration)
             for t in self._tables:

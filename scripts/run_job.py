@@ -91,7 +91,7 @@ def main() -> None:
     elif args.algorithm == "components":
         from communitydetection_jl_spark.operators.components import connected_components
 
-        out, meta = connected_components(edges), {}
+        out, meta = connected_components(edges, ledger=ledger), {}
     elif args.algorithm == "louvain":
         from communitydetection_jl_spark.operators.louvain import louvain
 

@@ -42,6 +42,40 @@ def np_pagerank(arcs, tau=0.15, tol=1e-12, max_iter=1000):
     return {v: p[idx[v]] for v in nodes}
 
 
+def np_lpa(pairs, parity, max_iter):
+    """Unit-vote LPA under the engine's semi-synchronous schedule
+    (operators/lpa.py), replayed vertex by vertex: identity labels;
+    every arc (u, v) is heard both ways, a self-loop once, duplicates
+    each time; at superstep t (from 0) only vertices whose ``parity``
+    is t % 2 move, each to its most heard label, ties to its own label,
+    then to the smallest; stop after two consecutive zero-mover
+    supersteps or ``max_iter``. ``parity`` maps every vertex id to 0/1.
+
+    Returns (id -> label renumbered first-seen as permute_labels does,
+    movers per superstep)."""
+    heard = defaultdict(list)  # listener -> speakers
+    for a, b in pairs:
+        heard[a].append(b)
+        if a != b:
+            heard[b].append(a)
+    lab = {v: v for v in parity}
+    movers = []
+    for t in range(max_iter):
+        new = dict(lab)
+        for v, spk in heard.items():
+            if parity[v] == t % 2:
+                cnt = Counter(lab[s] for s in spk)
+                new[v] = max(cnt, key=lambda c: (cnt[c], c == lab[v], -c))
+        movers.append(sum(new[v] != lab[v] for v in lab))
+        lab = new
+        if movers[-2:] == [0, 0]:
+            break
+    first = {}
+    for v in sorted(lab):
+        first.setdefault(lab[v], len(first) + 1)
+    return {v: first[lab[v]] for v in lab}, movers
+
+
 def np_components(pairs):
     """Union-find components; returns dict id -> min id of component."""
     parent = {}

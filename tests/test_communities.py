@@ -27,11 +27,31 @@ from communitydetection_jl_spark.operators.modularity import modularity
 from communitydetection_jl_spark.operators.multilevel import hlpa
 from communitydetection_jl_spark.sources import fixtures as fx
 
-from .oracles import np_nmi
+from .oracles import np_lpa, np_nmi
 
 
 def _nmi_vs_truth(labels_df, truth_df):
     return nmi(labels_df, truth_df)
+
+
+def _parity(edges):
+    """id -> the engine's move parity, Spark's own pmod(xxhash64(id), 2)."""
+    from communitydetection_jl_spark.functions.graph import vertices_of
+
+    return {
+        r.id: r.p for r in vertices_of(edges).select(
+            "id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("p")).collect()
+    }
+
+
+def _np_lpa_of(edges, max_iter):
+    """np_lpa over a Spark edge frame: (id -> label, movers)."""
+    pairs = [(r.src, r.dst) for r in edges.select("src", "dst").collect()]
+    return np_lpa(pairs, _parity(edges), max_iter)
+
+
+def _labels(res):
+    return {r.id: r.comm for r in res.labels.collect()}
 
 
 def test_lpa_two_triangles_exact(spark):
@@ -309,12 +329,26 @@ def test_louvain_record_quality(spark):
 
 
 def test_lpa_tables_csr_matches_dir(spark):
-    """tables mode (CSR speaker arrays + bucketed state) must produce
-    exactly the labels of the plain dir mode."""
-    edges, _ = fx.ring_of_cliques(spark)
-    a = {(r.id, r.comm) for r in lpa(edges, max_iter=15, mode="dir").labels.collect()}
-    b = {(r.id, r.comm) for r in lpa(edges, max_iter=15, mode="tables").labels.collect()}
-    assert a == b
+    """The storage mode picks storage only: dir mode (cached CSR view,
+    parquet state) and tables mode (bucketed CSR table and state) run
+    the same plans, so mover history, delta engage point, first
+    superstep plan and labels agree — and both equal the independent
+    NumPy replay. ring_of_cliques is duplicate-free, so both modes take
+    the identity-init first superstep."""
+    for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
+        edges, _ = fixture(spark)
+        want, movers = _np_lpa_of(edges, 15)
+        runs = {mode: lpa(edges, max_iter=15, mode=mode,
+                          state_name=f"lpa_cm_{mode}_{name}")
+                for mode in ("dir", "tables")}
+        for mode, res in runs.items():
+            assert res.changed_history == movers, (name, mode)
+            assert _labels(res) == want, (name, mode)
+        d, t = runs["dir"], runs["tables"]
+        assert d.delta_from == t.delta_from, name
+        assert d.first_superstep_fast == t.first_superstep_fast, name
+        if name == "rc":
+            assert d.first_superstep_fast is True
 
 
 def test_hlpa_record_quality(spark):
@@ -333,18 +367,19 @@ def test_lpa_delta_counts_exact(spark):
     to full re-aggregation: identical per-superstep mover counts and
     identical final labels, with the counts path forced to engage from
     superstep 2 (delta_msgs_frac > 1 covers the Σ(deg+1)+wants bound
-    even when every vertex moves)."""
-    for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
-        edges, _ = fixture(spark)
-        full = lpa(edges, max_iter=30, mode="tables", delta=False,
-                   state_name=f"lpa_nd_{name}")
-        dl = lpa(edges, max_iter=30, mode="tables", delta=True,
-                 delta_msgs_frac=3.0, state_name=f"lpa_dl_{name}")
-        assert dl.delta_from is not None and dl.delta_from <= 3, name
-        assert full.changed_history == dl.changed_history, name
-        a = {(r.id, r.comm) for r in full.labels.collect()}
-        b = {(r.id, r.comm) for r in dl.labels.collect()}
-        assert a == b, name
+    even when every vertex moves). Both storage modes."""
+    for mode in ("dir", "tables"):
+        for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
+            edges, _ = fixture(spark)
+            full = lpa(edges, max_iter=30, mode=mode, delta=False,
+                       state_name=f"lpa_nd_{mode}_{name}")
+            dl = lpa(edges, max_iter=30, mode=mode, delta=True,
+                     delta_msgs_frac=3.0, state_name=f"lpa_dl_{mode}_{name}")
+            assert dl.delta_from is not None and dl.delta_from <= 3, (mode, name)
+            assert full.changed_history == dl.changed_history, (mode, name)
+            a = {(r.id, r.comm) for r in full.labels.collect()}
+            b = {(r.id, r.comm) for r in dl.labels.collect()}
+            assert a == b, (mode, name)
 
 
 def test_lpa_delta_shuffle_join_exact(spark):
@@ -354,19 +389,21 @@ def test_lpa_delta_shuffle_join_exact(spark):
     incremental superstep is forced through the shuffle join, and the
     run must still match the full re-aggregation mover-for-mover and
     label-for-label. This is the 100×-scale regime (sustained
-    multi-million-mover supersteps) exercised at test scale."""
-    for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
-        edges, _ = fixture(spark)
-        full = lpa(edges, max_iter=30, mode="tables", delta=False,
-                   state_name=f"lpa_nds_{name}")
-        dl = lpa(edges, max_iter=30, mode="tables", delta=True,
-                 delta_msgs_frac=3.0, delta_bcast_max=0,
-                 state_name=f"lpa_dls_{name}")
-        assert dl.delta_from is not None and dl.delta_from <= 3, name
-        assert full.changed_history == dl.changed_history, name
-        a = {(r.id, r.comm) for r in full.labels.collect()}
-        b = {(r.id, r.comm) for r in dl.labels.collect()}
-        assert a == b, name
+    multi-million-mover supersteps) exercised at test scale. Both
+    storage modes."""
+    for mode in ("dir", "tables"):
+        for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
+            edges, _ = fixture(spark)
+            full = lpa(edges, max_iter=30, mode=mode, delta=False,
+                       state_name=f"lpa_nds_{mode}_{name}")
+            dl = lpa(edges, max_iter=30, mode=mode, delta=True,
+                     delta_msgs_frac=3.0, delta_bcast_max=0,
+                     state_name=f"lpa_dls_{mode}_{name}")
+            assert dl.delta_from is not None and dl.delta_from <= 3, (mode, name)
+            assert full.changed_history == dl.changed_history, (mode, name)
+            a = {(r.id, r.comm) for r in full.labels.collect()}
+            b = {(r.id, r.comm) for r in dl.labels.collect()}
+            assert a == b, (mode, name)
 
 
 def test_lpa_id_shift_invariance(spark):
@@ -399,10 +436,11 @@ def test_lpa_strategy_invariance(spark):
     execution choices over the same semantics. Four configurations —
     plain dir mode, tables with frontier+delta disabled, tables with a
     force-engaged frontier, tables with force-engaged delta — must
-    produce identical per-superstep mover counts and identical final
-    labels."""
+    produce the per-superstep mover counts and final labels of the
+    independent NumPy replay."""
     for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
         edges, _ = fixture(spark)
+        want, movers = _np_lpa_of(edges, 30)
         runs = {
             "dir": lpa(edges, max_iter=30, mode="dir",
                        state_name=f"lpa_si_dir_{name}"),
@@ -416,13 +454,9 @@ def test_lpa_strategy_invariance(spark):
                          state_name=f"lpa_si_dl_{name}"),
         }
         hist = {k: r.changed_history for k, r in runs.items()}
-        assert hist["dir"] == hist["bare"] == hist["frontier"] == hist["delta"], (
-            name, hist)
-        labels = {
-            k: {(r.id, r.comm) for r in v.labels.collect()}
-            for k, v in runs.items()
-        }
-        assert labels["dir"] == labels["bare"] == labels["frontier"] == labels["delta"], name
+        assert all(h == movers for h in hist.values()), (name, movers, hist)
+        for k, res in runs.items():
+            assert _labels(res) == want, (name, k)
 
 
 def test_lpa_gather_widening_exact(spark, monkeypatch):
@@ -505,15 +539,15 @@ def test_lpa_first_superstep_fastpath(spark):
     """The identity-init first superstep reduces to one min-neighbor
     aggregation when the symmetrized (listener, speaker) pairs are
     duplicate-free — gated by the exact dup metric observed on the CSR
-    build. Three shapes pin the gate and the semantics:
+    build. Four shapes pin the gate and the semantics, each against the
+    independent NumPy replay (np_lpa):
 
     (a) clean canonical graph: fast path engages (first_superstep_fast)
-        and the full run matches dir mode exactly (covered broadly by
-        test_lpa_tables_csr_matches_dir; re-asserted here with the flag);
+        and mover history and labels match the replay;
     (b) mutual directed pair (both (u,v) and (v,u) in the input): the
         symmetrized view holds the pair twice -> dup mass 20% of
         messages, far above the 2% engage bound -> fast path must NOT
-        engage, and labels still match dir mode;
+        engage, and labels still match the replay;
     (c) self-loops: a self-loop is a real vote for the vertex's own
         label (cnt 1, sticky cur=true) and must win against a cnt-1
         neighbor vote under the (cnt, cur, -lbl) tie-break;
@@ -526,46 +560,54 @@ def test_lpa_first_superstep_fastpath(spark):
     edges, _ = fx.ring_of_cliques(spark)
     fast = lpa(edges, max_iter=15, mode="tables", state_name="lpa_fp_a")
     assert fast.first_superstep_fast is True
-    ref = lpa(edges, max_iter=15, mode="dir", state_name="lpa_fp_a_d")
-    assert {(r.id, r.comm) for r in fast.labels.collect()} == {
-        (r.id, r.comm) for r in ref.labels.collect()
-    }
+    want, movers = _np_lpa_of(edges, 15)
+    assert fast.changed_history == movers
+    assert _labels(fast) == want
 
     # (b) mutual pair -> duplicate sym rows -> fallback, same answer
     rows = [(1, 2), (2, 1), (2, 3), (3, 4), (4, 1)]
     dup_edges = spark.createDataFrame(rows, "src long, dst long")
     dup = lpa(dup_edges, max_iter=10, mode="tables", state_name="lpa_fp_b")
     assert dup.first_superstep_fast is False
-    dref = lpa(dup_edges, max_iter=10, mode="dir", state_name="lpa_fp_b_d")
-    assert {(r.id, r.comm) for r in dup.labels.collect()} == {
-        (r.id, r.comm) for r in dref.labels.collect()
-    }
+    want, movers = _np_lpa_of(dup_edges, 10)
+    assert dup.changed_history == movers
+    assert _labels(dup) == want
 
     # (c) self-loops: fast path engages (a self-loop is one sym row),
-    # answers match dir mode; isolated-from-others vertex keeps itself
+    # answers match the replay; isolated-from-others vertex keeps itself
     rows = [(1, 1), (1, 2), (3, 4), (5, 5)]
     sl_edges = spark.createDataFrame(rows, "src long, dst long")
     sl = lpa(sl_edges, max_iter=10, mode="tables", state_name="lpa_fp_c")
     assert sl.first_superstep_fast is True
-    sref = lpa(sl_edges, max_iter=10, mode="dir", state_name="lpa_fp_c_d")
-    assert {(r.id, r.comm) for r in sl.labels.collect()} == {
-        (r.id, r.comm) for r in sref.labels.collect()
-    }
+    want, movers = _np_lpa_of(sl_edges, 10)
+    assert sl.changed_history == movers
+    assert _labels(sl) == want
 
     # (d) sparse duplicates: clique ring + one reversed existing edge
     # (the canonical fixture stores each undirected edge once, so the
     # reverse row duplicates its sym pair); dup mass 2 of ~370 msgs
-    # engages the fast path with the dup-correction candidates live
+    # engages the fast path with the dup-correction candidates live.
+    # The edge joins a vertex u that may move at superstep 1 to its
+    # LARGEST neighbor v, so u's cnt-2 vote for v must beat the
+    # smaller-id cnt-1 votes a bare min-neighbor plan would pick
     base_edges, _ = fx.ring_of_cliques(spark)
-    one = base_edges.limit(1).select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
+    parity = _parity(base_edges)
+    nbrs = {}
+    for r in base_edges.select("src", "dst").collect():
+        nbrs.setdefault(r.src, set()).add(r.dst)
+        nbrs.setdefault(r.dst, set()).add(r.src)
+    u, v = next((u, max(ns)) for u, ns in sorted(nbrs.items())
+                if parity[u] == 0 and len(ns) > 1)
+    one = base_edges.filter(
+        ((F.col("src") == u) & (F.col("dst") == v))
+        | ((F.col("src") == v) & (F.col("dst") == u))
+    ).select(F.col("dst").alias("src"), F.col("src").alias("dst"), "weight")
     mix = base_edges.unionByName(one)
     dd = lpa(mix, max_iter=15, mode="tables", state_name="lpa_fp_d")
     assert dd.first_superstep_fast is True
-    ddref = lpa(mix, max_iter=15, mode="dir", state_name="lpa_fp_d_d")
-    # per-superstep mover counts pin superstep-1 equality itself, not
+    want, movers = _np_lpa_of(mix, 15)
+    # per-superstep mover counts pin superstep-1 movers themselves, not
     # just the (convergence-forgiving) final labels
-    assert dd.changed_history == ddref.changed_history
-    assert {(r.id, r.comm) for r in dd.labels.collect()} == {
-        (r.id, r.comm) for r in ddref.labels.collect()
-    }
+    assert dd.changed_history[0] == movers[0]
+    assert dd.changed_history == movers
+    assert _labels(dd) == want

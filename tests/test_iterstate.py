@@ -62,6 +62,31 @@ def test_stateloop_resume(spark, tmp_path):
     assert resumed.agg(F.max("k")).collect()[0][0] == 3
 
 
+def test_stateloop_resume_skips_half_written_iteration(spark, tmp_path):
+    """A run cut mid-write leaves iter=K without its job-commit marker
+    (and possibly without some part files): resume must reopen K-1."""
+    class FakeLedger:
+        dir = str(tmp_path / "run1")
+
+        def record(self, it, m):
+            pass
+
+    os.makedirs(FakeLedger.dir, exist_ok=True)
+    loop = StateLoop(spark, "alg", ledger=FakeLedger())
+    st = loop.init(spark.range(5).select("id", F.lit(0).alias("k")))
+    for _ in range(3):
+        st, _ = loop.step(st.select("id", (F.col("k") + 1).alias("k")), {})
+    newest = os.path.join(loop.dir, "iter=3")
+    os.remove(os.path.join(newest, "_SUCCESS"))
+    parts = sorted(f for f in os.listdir(newest) if f.startswith("part-"))
+    os.remove(os.path.join(newest, parts[0]))
+    loop2 = StateLoop(spark, "alg", ledger=FakeLedger())
+    resumed = loop2.resume()
+    assert resumed is not None
+    assert loop2.iteration == 2
+    assert sorted(r.k for r in resumed.collect()) == [2] * 5
+
+
 def test_stateloop_tables_mode(spark):
     loop = StateLoop(spark, "tt", mode="tables", bucket_key="id")
     st = loop.init(spark.range(50).select("id", F.lit(1.0).alias("v")))
@@ -73,6 +98,32 @@ def test_stateloop_tables_mode(spark):
     loop.cleanup()
     assert not spark.catalog.tableExists(loop._tables[0])
     assert not spark.catalog.tableExists(loop._tables[1])
+
+
+def test_stateloop_side_relation(spark, tmp_path):
+    """side() materializes a static relation in the loop's mode, fills
+    metrics observed on its plan, and cleanup() releases it."""
+    from pyspark.sql import Observation
+
+    for mode in ("dir", "tables"):
+        loop = StateLoop(spark, f"sd_{mode}", mode=mode, bucket_key="id",
+                         root=str(tmp_path))
+        obs = Observation(f"sd_{mode}")
+        plan = spark.range(40).repartition(loop.parts, "id").observe(
+            obs, F.count(F.lit(1)).alias("c"))
+        side = loop.side(plan, "id")
+        assert int(obs.get["c"]) == 40
+        assert side.count() == 40
+        if mode == "tables":
+            name = loop._sides[0]
+            assert spark.catalog.tableExists(name)
+        else:
+            assert side.is_cached
+        loop.cleanup()
+        if mode == "tables":
+            assert not spark.catalog.tableExists(name)
+        else:
+            assert not side.is_cached
 
 
 def test_dense_ids_bijection(spark):
