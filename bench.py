@@ -105,11 +105,10 @@ def main() -> None:
     # "tables" = bucketed arc/state tables, zero-exchange superstep joins
     bench_mode = os.environ.get("BENCH_MODE", "tables")
 
-    # BENCH_FUSED=1 (default): densify the ~m/replicas BASE (cheap),
-    # replicate with DENSE id offsets (nid + k·n_base, pure int
-    # arithmetic over a cached 1.3M-row frame) — the old path
-    # (BENCH_FUSED=0) instead densified AFTER replication, two
-    # shuffle-hash joins of the full 163M-row table (measured: fused
+    # Densify the ~m/replicas BASE (cheap), then replicate with DENSE
+    # id offsets (nid + k·n_base, pure int arithmetic over a
+    # checkpointed 1.3M-row frame): densifying AFTER replication took
+    # two shuffle-hash joins of the full 163M-row table (measured:
     # extract 21-31s vs 65-120s). The replicated union is still
     # written through parquet ONCE: an A/B that handed the lazy
     # 128-way union straight to the operators measured extract 21s
@@ -120,95 +119,51 @@ def main() -> None:
     # for the superstep loop). One columnar write + three cheap leaf
     # scans beats six union evaluations; at a real deployment the
     # extraction output would be a bucketed Iceberg/parquet table for
-    # exactly this reason. Graph identical up to the dense-id
-    # bijection (same arc count/degree distribution; oracle rows
-    # unchanged — LPA tie-breaks see different ids, so mover
-    # trajectories differ from the pre-fused records in r1-r4).
-    fused = os.environ.get("BENCH_FUSED", "1") != "0"
-
+    # exactly this reason (docs/PLANS.md, "Bench graph build").
     def build_web_graph():
+        import tempfile
+
         from communitydetection_jl_spark.functions.ids import densify_edges
+        from communitydetection_jl_spark.functions.scratch import register
 
         pages = synth_pages(spark, n_pages=n_pages, n_hosts=max(64, n_pages // 100),
                             avg_outlinks=outlinks)
         dim = url_dim(latest_captures(pages))
         e = restrict_to_corpus(extract_edges(pages), dim)
-        if fused:
-            # dense int32 ids on the BASE, then offset-replicate
-            e, edim = densify_edges(e)
-            e = e.localCheckpoint(eager=True)
-            base_m = e.count()
-            n_base = int(edim.count())
-            edim.unpersist()
-            if replicas > 1:
-                copies = [
-                    e.select(
-                        (F.col("src") + F.lit(k * n_base)).alias("src"),
-                        (F.col("dst") + F.lit(k * n_base)).alias("dst"),
-                        "weight",
-                    )
-                    for k in range(replicas)
-                ]
-                out = copies[0]
-                for c in copies[1:]:
-                    out = out.unionByName(c)
-                e = out
-            # ONE materialization of the replicated graph (see the
-            # BENCH_FUSED note above), then drop the cached base so
-            # the superstep loops start with a clean block manager
-            import tempfile
-
-            from communitydetection_jl_spark.functions.scratch import register
-            sdir = os.environ.get("SPARK_GRAFT_STATE_DIR") or tempfile.gettempdir()
-            epath = os.path.join(sdir, f"bench_edges_{os.getpid()}")
-            register(epath)
-            e.repartition(cpus, "src").write.mode("overwrite").parquet(epath)
-            spark.catalog.clearCache()
-            e = spark.read.parquet(epath)
-            return e, base_m * max(replicas, 1)
+        # dense int32 ids on the BASE, then offset-replicate
+        e, edim = densify_edges(e)
+        base = e.localCheckpoint(eager=True)
+        base_m = base.count()
+        n_base = int(edim.count())
+        edim.unpersist()
+        e = base
         if replicas > 1:
-            # disjoint structural copies (vertex-id offset) — scales the
-            # superstep workload without scaling python-side corpus
-            # generation; identical across parallelism levels
-            e = e.localCheckpoint(eager=True)  # materialize extraction once
-            # fold ids into 2^40 space first so the offset can't overflow
-            # an ANSI-mode long
-            base = e.select(
-                F.pmod(F.col("src"), F.lit(1 << 40)).alias("src"),
-                F.pmod(F.col("dst"), F.lit(1 << 40)).alias("dst"),
-                "weight",
-            )
             copies = [
                 base.select(
-                    (F.col("src") + F.lit(k << 44)).alias("src"),
-                    (F.col("dst") + F.lit(k << 44)).alias("dst"),
+                    (F.col("src") + F.lit(k * n_base)).alias("src"),
+                    (F.col("dst") + F.lit(k * n_base)).alias("dst"),
                     "weight",
                 )
                 for k in range(replicas)
             ]
-            out = copies[0]
+            e = copies[0]
             for c in copies[1:]:
-                out = out.unionByName(c)
-            e = out
-        # dense int32 ids: halves state/shuffle row width (SURVEY.md §4.3)
-        e, _ = densify_edges(e)
-        # parquet round-trip: materialize AND truncate the extraction
-        # plan (a leaf relation with real file stats); localCheckpoint
-        # at this width holds ~m deserialized rows in the block manager
-        import tempfile
-
-        from communitydetection_jl_spark.functions.scratch import register
-        base = os.environ.get("SPARK_GRAFT_STATE_DIR") or tempfile.gettempdir()
-        epath = os.path.join(base, f"bench_edges_{os.getpid()}")
+                e = e.unionByName(c)
+        # ONE materialization of the replicated graph, then drop ALL
+        # construction residue so the superstep loops start with a
+        # clean block manager (a few GB of tenured block-manager data
+        # taxes every GC of the superstep loop; measured +50% on the
+        # 16-core PageRank superstep median). clearCache() drops
+        # SQL-cached frames only; the checkpointed base's blocks
+        # belong to its RDD and are freed explicitly.
+        sdir = os.environ.get("SPARK_GRAFT_STATE_DIR") or tempfile.gettempdir()
+        epath = os.path.join(sdir, f"bench_edges_{os.getpid()}")
         register(epath)  # purge at exit — RAM-backed when STATE_DIR=/dev/shm
         e.repartition(cpus, "src").write.mode("overwrite").parquet(epath)
-        # drop ALL construction residue (densify's persisted dim, cached
-        # frames) before the measured supersteps: a few GB of tenured
-        # block-manager data taxes every GC of the superstep loop
-        # (measured: +50% on the 16-core PageRank superstep median)
         spark.catalog.clearCache()
+        base._jdf.queryExecution().analyzed().rdd().unpersist(False)
         e = spark.read.parquet(epath)
-        return e, e.count()
+        return e, base_m * max(replicas, 1)
 
     def _median(xs):
         xs = sorted(xs)

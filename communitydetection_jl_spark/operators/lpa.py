@@ -26,10 +26,14 @@ a true fixpoint (a lone quiet superstep only certifies one parity).
 
 Execution discipline (plans/iterstate.py): per superstep exactly ONE
 action — the state write with the mover counts observed on the same
-job. Each superstep runs one of three plans, chosen in ONE place in
-label_propagation: the delta-counts argmax, the identity-init
-min-neighbor first superstep, or the full gather. Three tricks keep
-the full gather narrow:
+job. Each superstep runs one of three plans, picked by ONE gate at the
+top of the superstep from the previous write's observed cardinalities
+(movers, their degree mass over the last one and two supersteps) — the
+Spec-QP rule of planning each step from what the last one measured:
+the identity-init min-neighbor first superstep, the delta-counts
+argmax (``_DELTA_MSGS_FRAC``, ``_DELTA_BCAST_MAX``), or the full gather
+(``_FRONTIER_MAX``, ``_GATHER_GROUP_BUDGET``). Three tricks keep the
+full gather narrow:
 
  - self rows: the listener's own label enters the gather as a
    zero-weight row flagged cur=true, so (a) every vertex is covered
@@ -47,9 +51,10 @@ the full gather narrow:
    filter does not touch;
  - the reference's active-node frontier (src/label_propagation.jl:
    100-113) becomes a broadcast semi-join filter: once the observed
-   mover-degree bound is small, gather only listeners whose argmax
-   inputs could have changed — exact under sticky tie-breaking
-   because an unchanged vote multiset cannot flip a sticky argmax.
+   mover-degree bound is at most ``_FRONTIER_MAX``, gather only
+   listeners whose argmax inputs could have changed — exact under
+   sticky tie-breaking because an unchanged vote multiset cannot flip
+   a sticky argmax.
    The run tracks movers of the last TWO supersteps (state column
    ``prevch``): a vertex inactive at superstep t re-evaluates at t+1,
    so movers/mover-neighbors from BOTH t−1 and t are the exact stale
@@ -79,6 +84,16 @@ from .triangles import edge_common_neighbors
 # depend on the cluster size.
 _GATHER_GROUP_BUDGET = 1_500_000
 _GATHER_WIDEN_UNTIL = 3
+# The plan gate's thresholds (label_propagation). A full gather
+# narrows to the broadcast stale-set frontier once the last two
+# supersteps' Σ(deg+1) over movers is at most _FRONTIER_MAX. The
+# delta-counts superstep engages once the last superstep's
+# Σ(deg+1) + movers is at most _DELTA_MSGS_FRAC·2m and stays while
+# Σ(deg+1) is; its movers are broadcast up to _DELTA_BCAST_MAX and
+# shuffle-joined above. Tests lower or negate them to force a path.
+_FRONTIER_MAX = 200_000
+_DELTA_MSGS_FRAC = 0.25
+_DELTA_BCAST_MAX = 2_000_000
 
 
 @dataclass
@@ -146,11 +161,10 @@ def lpa_superstep(
     listener_pred=None,
     gather_parts: int | None = None,
 ) -> DataFrame:
-    """One gather/argmax superstep. ``sym_edges`` is (src, dst, vote),
-    or bare (src, dst) for the unit-vote fast path — then votes are
-    row counts and the gather streams 16B int pairs instead of 24B
-    (the same bytes-per-message cut that fixed PageRank's scaling
-    efficiency). ``labels`` is (id, lbl); returns (id, lbl, changed)
+    """One gather/argmax superstep. ``sym_edges`` is the unit-vote CSR
+    speaker view (dst, srcs) — votes are row counts and the gather
+    joins n speaker rows instead of 2m pairs — or a (src, dst, vote)
+    pair view. ``labels`` is (id, lbl); returns (id, lbl, changed)
     with every evaluated listener moved to its argmax.
 
     ``listener_pred`` (a Column predicate over ``id``) restricts the
@@ -158,14 +172,14 @@ def lpa_superstep(
     passes the active-parity test here so a semi-sync full gather
     shuffles only the half of the messages whose argmax can act this
     superstep; the caller passes non-matching rows through unchanged.
-    Default None keeps the evaluate-everyone contract (the driver's
-    ``lpa_step`` oracle runs this form).
+    ``active`` (CSR view only) is a broadcast listener set applied
+    after the explode. Default None keeps the evaluate-everyone
+    contract (the driver's ``lpa_step`` oracle runs this form).
 
     Kept as a standalone, SQL-checkable unit (the driver oracle runs
     the equivalent ANSI SQL); label_propagation() below fuses the same
     plan into its write job."""
     state = labels.select("id", "lbl")
-    unit = "vote" not in sym_edges.columns
 
     def _to_id(df):
         # ONE exchange per superstep: hash-partitioning by id alone
@@ -177,28 +191,20 @@ def lpa_superstep(
         return (df.repartition(gather_parts, "id") if gather_parts
                 else df.repartition("id"))
 
-    if unit:
-        if "srcs" in sym_edges.columns:
-            # CSR gather: one row per speaker with its listener array
-            # (dst, srcs) — half the bytes and n joins instead of 2m
-            # (same fast path as PageRank's uniform arcs)
-            gather = sym_edges.join(
-                state.withColumnRenamed("id", "dst"), "dst"
-            ).select(
-                F.explode("srcs").alias("id"), "lbl", F.lit(False).alias("cur")
+    if "srcs" in sym_edges.columns:
+        # CSR gather: one row per speaker with its listener array
+        # (same fast path as PageRank's uniform arcs)
+        gather = sym_edges.join(
+            state.withColumnRenamed("id", "dst"), "dst"
+        ).select(
+            F.explode("srcs").alias("id"), "lbl", F.lit(False).alias("cur")
+        )
+        if listener_pred is not None:
+            gather = gather.filter(listener_pred)
+        if active is not None:
+            gather = gather.join(
+                F.broadcast(active), "id", "left_semi"
             )
-            if listener_pred is not None:
-                gather = gather.filter(listener_pred)
-            if active is not None:
-                gather = gather.join(
-                    F.broadcast(active), "id", "left_semi"
-                )
-        else:
-            gather = sym_edges.join(
-                state.withColumnRenamed("id", "dst"), "dst"
-            ).select(F.col("src").alias("id"), "lbl", F.lit(False).alias("cur"))
-            if listener_pred is not None:
-                gather = gather.filter(listener_pred)
         self_rows = state.select("id", "lbl", F.lit(True).alias("cur"))
         if listener_pred is not None:
             self_rows = self_rows.filter(listener_pred)
@@ -248,9 +254,10 @@ def lpa_superstep(
 
 def _vote_edges(edges: DataFrame, weighted: bool, cn_bonus: bool) -> DataFrame:
     """Symmetrized edge view with a ``vote`` column — or bare
-    (src, dst) pairs in the default unit-vote case (votes become row
-    counts in lpa_superstep; 33% fewer bytes per gathered message).
-    Every vertex of ``edges`` is a src (and a dst) of the view."""
+    (src, dst) pairs in the default unit-vote case, which
+    label_propagation folds into the CSR speaker view (votes become
+    row counts). Every vertex of ``edges`` is a src (and a dst) of the
+    view."""
     if cn_bonus:
         e = edge_common_neighbors(edges)  # (src, dst, weight, cn), no loops
         e = e.select("src", "dst", (F.lit(1.0) + F.col("cn")).alias("vote"))
@@ -313,7 +320,7 @@ def _next_state(state: DataFrame, best: DataFrame, new_lbl) -> DataFrame:
     )
 
 
-def _gather_plan(sym: DataFrame, state: DataFrame, may_move, sticky: bool,
+def _gather_plan(sym: DataFrame, state: DataFrame, may_move,
                  small_frontier: bool, gather_parts: int | None) -> DataFrame:
     """Full gather: evaluate ONLY active-parity listeners
     (lpa_superstep's listener_pred) — half the exchange volume and agg
@@ -353,7 +360,6 @@ def _gather_plan(sym: DataFrame, state: DataFrame, may_move, sticky: bool,
     ev = lpa_superstep(
         gather_sym,
         state.select("id", "lbl"),
-        sticky=sticky,
         active=active_set,
         listener_pred=may_move,
         gather_parts=gather_parts,
@@ -423,8 +429,7 @@ def _first_superstep_plan(sym: DataFrame, state: DataFrame, may_move,
     return _next_state(state, best, F.greatest(*cands).getField("lbl"))
 
 
-def _delta_plan(state: DataFrame, counts: DataFrame, may_move,
-                sticky: bool) -> DataFrame:
+def _delta_plan(state: DataFrame, counts: DataFrame, may_move) -> DataFrame:
     """Argmax over the maintained (id, lbl, cnt) counts: both sides
     bucketed by id, zero exchange. Only active-parity listeners' argmax
     can act, so the counts side is parity-filtered up front — inactive
@@ -434,11 +439,23 @@ def _delta_plan(state: DataFrame, counts: DataFrame, may_move,
     j = counts.select("id", "lbl", "cnt").filter(may_move).join(
         state.select("id", F.col("lbl").alias("cur_lbl")), "id"
     )
-    cur = (F.col("lbl") == F.col("cur_lbl")) if sticky else F.lit(0)
     best = j.groupBy("id").agg(
-        F.max(_vote_key(F.col("cnt"), cur, F.col("lbl"))).alias("_want")
+        F.max(_vote_key(F.col("cnt"), F.col("lbl") == F.col("cur_lbl"),
+                        F.col("lbl"))).alias("_want")
     ).select("id", F.col("_want.lbl").alias("want_lbl"))
     return _next_state(state, best, F.coalesce("want_lbl", F.col("cur_lbl")))
+
+
+def _label_counts(sym: DataFrame, state: DataFrame, P: int) -> DataFrame:
+    """The (id, lbl, cnt) neighbor-label counts of the current labels:
+    ONE full gather, bucketed by listener."""
+    return (
+        sym.join(state.select(F.col("id").alias("dst"), "lbl"), "dst")
+        .select(F.explode("srcs").alias("id"), "lbl")
+        .repartition(P, "id")
+        .groupBy("id", "lbl")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
 
 def _apply_moves(sym: DataFrame, state: DataFrame, counts: DataFrame,
@@ -497,18 +514,12 @@ def label_propagation(
     edges: DataFrame,
     weighted: bool = False,
     cn_bonus: bool = False,
-    sticky: bool = True,
     max_iter: int = 200,
     renumber: bool = True,
-    frontier: bool = True,
-    frontier_max: int = 200_000,
     ledger=None,
     mode: str = "dir",
     state_name: str = "lpa_state",
     parity_expr=None,
-    delta: bool = True,
-    delta_msgs_frac: float = 0.25,
-    delta_bcast_max: int = 2_000_000,
 ) -> LPAResult:
     """Run LPA to fixpoint. ``cn_bonus=True`` gives nsdlpa
     (src/label_propagation.jl:77-96); ``weighted=True`` uses edge
@@ -518,38 +529,39 @@ def label_propagation(
     the structure-blind pmod(xxhash64(id), 2) move parity, which makes
     the whole run SQL-oracle-reproducible (driver correctness gate).
 
-    ``frontier=True`` switches to broadcast-filtered gathers once the
-    observed mover count drops below ``frontier_max`` — exact under
-    sticky tie-breaking (a vertex whose vote multiset is unchanged
-    keeps its label).
-
     ``mode`` picks where state and the vote view are stored
     (plans/iterstate.py); both modes run the same plans.
 
-    ``delta=True`` (unit votes only) switches mid-run to
-    the INCREMENTAL superstep: a bucketed (id, lbl, cnt) neighbor-label
-    count table is maintained from the movers' adjacency only — per
-    mover v, every listener u of v gets cnt(u, old_lbl) −= 1,
-    cnt(u, new_lbl) += 1 — instead of re-gathering all 2m messages.
-    Integer counts make it EXACTLY equivalent to the full
-    re-aggregation (pytest pins label-by-label equality; the lpa_full
-    recursive-CTE oracle pins the semantics the counts reproduce), so
-    the switch is pure execution strategy. Cost per superstep drops
-    from O(2m) gathered messages to O(Σdeg(movers) + |counts|);
-    the counts table starts at ~2m rows and shrinks toward n as labels
-    consolidate, so the switch is gated on the OBSERVED mover-degree
-    bound (the same fbound metric that gates the frontier broadcast):
-    engage when Σ(deg+1 of movers) + movers ≤ ``delta_msgs_frac``·2m.
-    Movers up to ``delta_bcast_max`` are broadcast to the CSR view
-    (zero exchange); ABOVE the cap they instead take one bucketed
-    hash(dst, P) shuffle join — the 100×-scale path, where a graph can
-    sustain multi-million-mover supersteps for which O(changed_edges)
-    still beats O(2m) — and the path only drops back to the full gather
-    on a genuine COST regression (Σ(deg+1) of movers > the engage
-    fraction of 2m; counts rebuilt if the gate re-engages). A map-typed
-    per-vertex counts column is deliberately NOT used: at engage time a
-    1e7-in-degree web hub would hold a 1e7-entry map in one row — the
-    unbounded-row failure the CSR chunk cap exists to prevent."""
+    Every superstep's plan is picked by ONE gate over the previous
+    write's observed movers, fbound = Σ(deg+1) of movers and fbound2
+    (the same over the last two supersteps) — pure execution strategy,
+    each path exact under the sticky tie-break:
+
+     - first superstep: the identity-init min-neighbor plan
+       (_first_superstep_plan), for unit votes with few duplicate
+       pairs on a fresh start;
+     - delta counts (unit votes only): a bucketed (id, lbl, cnt)
+       neighbor-label count table is maintained from the movers'
+       adjacency only — per mover v, every listener u of v gets
+       cnt(u, old_lbl) −= 1, cnt(u, new_lbl) += 1 — instead of
+       re-gathering all 2m messages. Integer counts make it EXACTLY
+       the full re-aggregation (pytest pins label-by-label equality).
+       Cost per superstep drops from O(2m) gathered messages to
+       O(Σdeg(movers) + |counts|); the table starts at ~2m rows, so
+       the path engages when fbound + movers ≤ ``_DELTA_MSGS_FRAC``·2m
+       (building the table from the current labels) and stays while
+       fbound ≤ ``_DELTA_MSGS_FRAC``·2m. Movers up to
+       ``_DELTA_BCAST_MAX`` are broadcast to the CSR view (zero
+       exchange); above the cap they take one bucketed hash(dst, P)
+       shuffle join — the 100×-scale path, where multi-million-mover
+       supersteps still beat O(2m). A map-typed per-vertex counts
+       column is deliberately NOT used: at engage time a 1e7-in-degree
+       web hub would hold a 1e7-entry map in one row — the
+       unbounded-row failure the CSR chunk cap exists to prevent;
+     - full gather, narrowed to the broadcast stale-set frontier once
+       fbound2 ≤ ``_FRONTIER_MAX`` (a vertex whose vote multiset is
+       unchanged keeps its sticky argmax), its exchange widened at peak
+       label diversity (_gather_parts)."""
     spark = edges.sparkSession
     loop = StateLoop(spark, state_name, mode=mode, bucket_key="id",
                      ledger=ledger)
@@ -591,13 +603,7 @@ def label_propagation(
     total_msgs = int(got_sym["msgs"])
     sym_dups = int(got_sym["dups"]) if unit else None
 
-    state = None
-    if ledger is not None:
-        state = loop.resume()
-        if state is not None and "prevch" not in state.columns:
-            # snapshot from a pre-prevch build: True is the safe value
-            # (forces the first post-resume frontiers wide open)
-            state = state.withColumn("prevch", F.lit(True))
+    state = loop.resume() if ledger is not None else None
     start_iter = loop.iteration if state is not None else 0
     if state is None:
         # deg rides in the state so each superstep can OBSERVE
@@ -629,10 +635,10 @@ def label_propagation(
     changed_history: list[int] = []
     iter_secs: list[float] = []
     it = start_iter
-    changed_cnt = None              # movers of the last superstep
+    # observed on the previous superstep's write (None before the first)
+    changed_cnt = fbound = fbound2 = None
     prev_changed_cnt = None         # movers one superstep earlier
-    frontier_bound = None           # Σ(deg+1) over last supersteps' movers
-    fbound2_cnt = None              # same over the last TWO supersteps
+    delta_cap = _DELTA_MSGS_FRAC * total_msgs
     # identity-init first superstep: with identity labels, (listener,
     # label) vote groups are exactly the (listener, speaker) pairs, so
     # the argmax needs no 2m-group count — unique pairs contribute cnt-1
@@ -641,16 +647,15 @@ def label_propagation(
     # the few rows that contain them. EXACT for any input; engaged only
     # while the dup mass is small (above ~2% the dup rows approach the
     # general gather's cost anyway). Requires a fresh identity start
-    # (not resumed) under sticky tie-breaking and unit votes (sym_dups
-    # is observed on the CSR build).
+    # (not resumed) and unit votes (sym_dups is observed on the CSR
+    # build).
     simple1 = (
-        sticky and start_iter == 0 and unit
+        start_iter == 0 and unit
         and sym_dups <= 0.02 * max(total_msgs, 1)
     )
     used_fast1 = False
     counts = None            # delta mode: materialized (id, lbl, cnt)
     counts_loop = None
-    counts_fresh = False     # just (re)built from current labels?
     delta_from = None
     # shuffle partitions = bucket count keeps the gather agg and the
     # state join co-partitioned with zero extra exchange (restored via
@@ -661,47 +666,38 @@ def label_propagation(
             may_move = parity == F.lit(it % 2)
             it += 1
 
-            if counts is not None and \
-                    frontier_bound > delta_msgs_frac * total_msgs:
-                # COST regression, not a mechanism limit: Σdeg(movers)
-                # grew past the fraction of 2m where the incremental
-                # update is cheaper than one full gather — drop back to
-                # the full gather (the gate below rebuilds the counts
-                # table if it re-engages). A large mover count ALONE no
-                # longer aborts the path: above ``delta_bcast_max`` the
-                # movers side switches from a broadcast to a bucketed
-                # shuffle join (_apply_moves), so multi-million-mover
-                # supersteps — the sustained regime of a 100× graph —
-                # stay incremental as long as O(changed_edges) beats
-                # O(2m).
-                counts = None
-
-            # the ONE plan choice of the superstep
-            if counts is not None:
-                if delta_from is None:
-                    delta_from = it
-                if counts_fresh:
-                    # the table was built from the CURRENT labels (the
-                    # engage-time snapshot already reflects the last
-                    # superstep's moves) — applying those movers' deltas
-                    # again would double-count them
-                    counts_fresh = False
+            # THE plan gate, over the previous write's observations
+            if it == 1 and simple1:
+                used_fast1 = True
+                stepped = _first_superstep_plan(sym, state, may_move, sym_dups)
+            elif unit and changed_cnt is not None and (
+                    fbound <= delta_cap if counts is not None
+                    else fbound + changed_cnt <= delta_cap):
+                if counts is None:
+                    # engage: ONE full gather builds the counts table
+                    # from the current labels
+                    if counts_loop is None:
+                        counts_loop = StateLoop(
+                            spark, f"{state_name}_cnt", mode=mode,
+                            bucket_key="id", parts=P)
+                    counts = counts_loop.init(
+                        _label_counts(sym, state, P), start_iter=it - 1)
                 elif changed_cnt > 0:
                     counts, _ = counts_loop.step(_apply_moves(
                         sym, state, counts,
-                        changed_cnt <= delta_bcast_max, P), {})
-                stepped = _delta_plan(state, counts, may_move, sticky)
-            elif it == 1 and simple1:
-                used_fast1 = True
-                stepped = _first_superstep_plan(sym, state, may_move, sym_dups)
+                        changed_cnt <= _DELTA_BCAST_MAX, P), {})
+                if delta_from is None:
+                    delta_from = it
+                stepped = _delta_plan(state, counts, may_move)
             else:
-                small_frontier = (
-                    frontier
-                    and fbound2_cnt is not None
-                    and fbound2_cnt <= frontier_max
-                )
+                # a counts table whose cost gate failed (Σdeg(movers)
+                # grew past the fraction of 2m where the incremental
+                # update beats one full gather) is dropped; it is
+                # rebuilt if the gate re-engages
+                counts = None
                 stepped = _gather_plan(
-                    sym, state, may_move, sticky, small_frontier,
+                    sym, state, may_move,
+                    fbound2 is not None and fbound2 <= _FRONTIER_MAX,
                     _gather_parts(it, total_msgs, P))
             state, got = loop.step(
                 stepped,
@@ -722,8 +718,8 @@ def label_propagation(
                 },
             )
             changed_cnt = int(got.get("changed") or 0)
-            frontier_bound = int(got.get("fbound") or 0)
-            fbound2_cnt = int(got.get("fbound2") or 0)
+            fbound = int(got.get("fbound") or 0)
+            fbound2 = int(got.get("fbound2") or 0)
             changed_history.append(changed_cnt)
             iter_secs.append(_time.time() - t_it)
             # one quiet superstep certifies only one parity; two in
@@ -734,23 +730,6 @@ def label_propagation(
             if changed_cnt == 0 and prev_changed_cnt == 0:
                 break
             prev_changed_cnt = changed_cnt
-            if delta and unit and counts is None and \
-                    frontier_bound + changed_cnt <= delta_msgs_frac * total_msgs:
-                # engage: ONE full gather builds the counts table
-                if counts_loop is None:
-                    counts_loop = StateLoop(
-                        spark, f"{state_name}_cnt", mode=mode,
-                        bucket_key="id", parts=P)
-                gather0 = sym.join(
-                    state.select(F.col("id").alias("dst"), "lbl"), "dst"
-                ).select(F.explode("srcs").alias("id"), "lbl")
-                counts = counts_loop.init(
-                    gather0.repartition(P, "id")
-                    .groupBy("id", "lbl")
-                    .agg(F.count(F.lit(1)).alias("cnt")),
-                    start_iter=it,
-                )
-                counts_fresh = True
 
     out = state.select("id", F.col("lbl").alias("comm"))
     if renumber:
@@ -758,8 +737,8 @@ def label_propagation(
     if counts_loop is not None:
         counts_loop.cleanup()
     loop.cleanup(keep_final=True)
-    # iter_secs covers the WHOLE superstep (counts maintenance + state
-    # write in delta mode), not just the state-loop action
+    # iter_secs covers the WHOLE superstep (counts build or maintenance
+    # + state write in delta mode), not just the state-loop action
     return LPAResult(out, it, changed_history, iter_secs, delta_from,
                      first_superstep_fast=used_fast1)
 

@@ -15,7 +15,9 @@ Each global round:
   1. adjacency edges grouped by shard(listener) — applyInPandas runs a
      seeded async sweep over the shard's internal vertices, votes from
      both internal and boundary neighbors;
-  2. updated labels are unioned and fed to the next round;
+  2. updated labels are unioned and written as the round's state
+     (plans/iterstate.StateLoop: one write per round with the mover
+     count observed on it; with a ledger, the resume point);
   3. converged when no label changes in a round.
 """
 
@@ -30,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.graph import materialize_iter, symmetrize, vertices_of, with_weight
+from ..plans.iterstate import StateLoop
 from .lpa import permute_labels
 
 
@@ -264,21 +267,25 @@ def lpa_async(
     a round they never interact — boundary labels are frozen at round
     start — so 'the t-th vertex of each shard' is a well-defined
     global micro-step)."""
+    spark = edges.sparkSession
+    loop = StateLoop(spark, "lpa_async", ledger=ledger)
     e = with_weight(edges)
-    sym = symmetrize(e).select(
+    sym = loop.side(symmetrize(e).select(
         "src", "dst", (F.col("weight") if weighted else F.lit(1.0)).alias("vote")
-    ).persist()
-    sym.count()
-    verts = vertices_of(e)
-    state = materialize_iter(verts.select("id", F.col("id").alias("lbl")))
-    labels = state
+    ).repartition(loop.parts, "src"), "src")
+    # a ledger resumes from the newest complete round: every round's
+    # RNG is seeded by its number, so the rest of the run is the same
+    state = loop.resume() if ledger is not None else None
+    if state is None:
+        state = loop.init(vertices_of(e).select(
+            "id", F.col("id").alias("lbl"), F.lit(False).alias("changed")))
 
     schema = "id long, lbl long, changed boolean"
     changed_history: list[int] = []
-    rnd = 0
+    rnd = loop.iteration
     while rnd < max_rounds:
         rnd += 1
-        cur_round = rnd
+        labels = state.select("id", "lbl")
         shard_col = (
             shard_expr(F.col("src")) if shard_expr is not None
             else F.pmod(F.xxhash64("src"), F.lit(n_shards))
@@ -288,32 +295,29 @@ def lpa_async(
             .join(labels.select(F.col("id").alias("src"), F.col("lbl").alias("src_lbl")), "src")
             .join(labels.select(F.col("id").alias("dst"), F.col("lbl").alias("dst_lbl")), "dst")
         )
-        def sweep(pdf: pd.DataFrame, _s=seed, _r=cur_round, _d=deterministic):
-            return _sweep_shard(pdf, _s, _r, _d)
 
-        # applyInPandas requires a 1-arg (data) signature; bind seed/round
-        # via a wrapper
-        def sweep1(pdf: pd.DataFrame) -> pd.DataFrame:
-            return sweep(pdf)
+        # applyInPandas takes a 1-arg (data) function; the round is
+        # bound when the UDF is pickled, inside this round's write
+        def sweep(pdf: pd.DataFrame) -> pd.DataFrame:
+            return _sweep_shard(pdf, seed, rnd, deterministic)
 
-        new_labels = shard_edges.groupBy("shard").applyInPandas(sweep1, schema)
+        new_labels = shard_edges.groupBy("shard").applyInPandas(sweep, schema)
         # vertices with no edges keep their label
         isolated = labels.join(new_labels.select("id"), "id", "left_anti").select(
             "id", "lbl", F.lit(False).alias("changed")
         )
-        new_state = materialize_iter(new_labels.unionByName(isolated), prev=state)
-        state = new_state
-        n_changed = new_state.filter(F.col("changed")).count()
-        labels = new_state.select("id", "lbl")
+        # ONE action per round: the state write, movers observed on it
+        state, got = loop.step(
+            new_labels.unionByName(isolated),
+            {"changed": F.sum(F.col("changed").cast("long"))},
+        )
+        n_changed = int(got.get("changed") or 0)
         changed_history.append(n_changed)
-        if ledger is not None:
-            ledger.record(rnd, {"changed": n_changed})
-            ledger.maybe_snapshot("labels_async", rnd, labels)
         if n_changed == 0:
             break
 
-    sym.unpersist()
-    out = labels.withColumnRenamed("lbl", "comm")
+    out = state.select("id", F.col("lbl").alias("comm"))
     if renumber:
         out = permute_labels(out)
+    loop.cleanup(keep_final=True)
     return AsyncLPAResult(out, rnd, changed_history)

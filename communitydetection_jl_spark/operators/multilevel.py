@@ -67,7 +67,7 @@ def hlpa(
     levels = 0
     for level in range(max_levels):
         res = label_propagation(
-            cur, weighted=True, sticky=True, max_iter=max_iter,
+            cur, weighted=True, max_iter=max_iter,
             renumber=False, ledger=ledger, state_name=f"lpa_level{level}",
             parity_expr=parity_expr,
         )

@@ -119,16 +119,10 @@ def pagerank(
     arcs = loop.side(arcs_plan, "src")
     adj_col = "dsts" if uniform else "nbrs"
 
-    state = None
-    if ledger is not None:
-        state = loop.resume()
-        if state is not None and "outdeg" not in state.columns:
-            state = None  # pre-fast-path snapshot; restart cleanly
+    state = loop.resume() if ledger is not None else None
     start_iter = loop.iteration if state is not None else 0
     dang = F.col("outdeg") == 0
     if state is None:
-        loop.iteration = 0
-        start_iter = 0
         # vertex discovery + out-degree in ONE union-aggregate over the
         # materialized CSR (src keys contribute their array sizes, dst
         # occurrences contribute 0): one exchange with map-side partial

@@ -10,14 +10,13 @@ Layout under ``root``::
     runs/<run_id>/
         manifest.json            run metadata (algorithm, params, seed)
         metrics.jsonl            one line per iteration: {"iter": k, ...}
-        <name>/iter=K/           parquet snapshot of the state DataFrame
         state/<name>/iter=K/     StateLoop's per-iteration state (dir mode)
 
-Snapshots are plain parquet (partition-preserving, readable by any
-executor count). Algorithms accept a ``ledger=`` parameter; their
-StateLoop (plans/iterstate.py) keeps its state under ``state/`` and
-reopens the newest iteration, so a new driver process continues
-from iteration K+1 — see operators/pagerank.py, operators/lpa.py.
+Algorithms accept a ``ledger=`` parameter; their StateLoop
+(plans/iterstate.py) keeps its state under ``state/`` as plain parquet
+(readable by any executor count) and reopens the newest complete
+iteration, so a new driver process continues from iteration K+1 — see
+operators/pagerank.py, operators/lpa.py, operators/lpa_async.py.
 """
 
 from __future__ import annotations
@@ -26,21 +25,17 @@ import json
 import os
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
-
 
 class RunLedger:
     def __init__(
         self,
         root: str,
         run_id: str | None = None,
-        snapshot_every: int = 5,
         manifest: dict | None = None,
     ):
         self.run_id = run_id or datetime.now(timezone.utc).strftime("%Y%m%dT%H%M%S%f")
         self.dir = os.path.join(root, self.run_id)
         os.makedirs(self.dir, exist_ok=True)
-        self.snapshot_every = snapshot_every
         self._metrics_path = os.path.join(self.dir, "metrics.jsonl")
         manifest_path = os.path.join(self.dir, "manifest.json")
         if manifest is not None and not os.path.exists(manifest_path):
@@ -57,16 +52,3 @@ class RunLedger:
             return []
         with open(self._metrics_path) as f:
             return [json.loads(line) for line in f if line.strip()]
-
-    # -- snapshots -----------------------------------------------------
-    def _snap_dir(self, name: str, iteration: int) -> str:
-        return os.path.join(self.dir, name, f"iter={iteration}")
-
-    def maybe_snapshot(self, name: str, iteration: int, df: DataFrame) -> bool:
-        if self.snapshot_every <= 0 or iteration % self.snapshot_every != 0:
-            return False
-        self.snapshot(name, iteration, df)
-        return True
-
-    def snapshot(self, name: str, iteration: int, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._snap_dir(name, iteration))

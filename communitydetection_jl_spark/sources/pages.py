@@ -163,7 +163,8 @@ def extract_hrefs(text: pd.Series) -> pd.Series:
     """Vectorized href extraction: absolute http(s) urls in href
     attributes of ``text`` (authoritative bytes per the input_hint
     invariant). Series→Series over Arrow batches — no per-row Python
-    UDF."""
+    UDF. The Python-regex reference that tests hold the JVM
+    ``extract_hrefs_expr`` to."""
     return text.fillna("").map(_HREF_RE.findall)
 
 
@@ -188,26 +189,17 @@ def url_ids(col):
     return F.abs(F.xxhash64(col))
 
 
-def extract_edges(
-    pages: DataFrame, dedup_latest: bool = True, engine: str = "jvm"
-) -> DataFrame:
+def extract_edges(pages: DataFrame, dedup_latest: bool = True) -> DataFrame:
     """pages → edges(src, dst, weight).
 
     One row per distinct (src,dst) link with weight = link multiplicity.
     Self-links dropped. Targets need not exist in the corpus (the web's
-    frontier); use ``restrict_to_corpus`` to close the graph.
-
-    ``engine="jvm"`` (default) extracts hrefs with regexp_extract_all
-    inside codegen; ``engine="pandas"`` uses the Arrow-batched UDF —
-    identical output (pinned by test), kept as the plug-in point for
-    extraction logic a regex can't express."""
+    frontier); use ``restrict_to_corpus`` to close the graph. Hrefs are
+    extracted by ``extract_hrefs_expr`` inside codegen."""
     p = latest_captures(pages) if dedup_latest else pages
-    hrefs = (
-        extract_hrefs_expr("text") if engine == "jvm" else extract_hrefs("text")
-    )
     links = p.select(
         url_ids("url").alias("src"),
-        F.explode(hrefs).alias("dst_url"),
+        F.explode(extract_hrefs_expr("text")).alias("dst_url"),
     )
     return (
         links.select("src", url_ids("dst_url").alias("dst"))

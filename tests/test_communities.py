@@ -65,18 +65,23 @@ def test_lpa_two_triangles_exact(spark):
 
 
 def test_lpa_unit_vote_path_matches_explicit(spark):
-    """The bare (src,dst) count-based gather must produce exactly the
-    labels of the explicit vote=1.0 sum-based gather."""
+    """The CSR speaker-view count-based gather (the unit-vote input
+    label_propagation builds) must produce exactly the labels of the
+    explicit vote=1.0 sum-based gather."""
     from pyspark.sql import functions as F
 
-    from communitydetection_jl_spark.functions.graph import symmetrize, vertices_of
+    from communitydetection_jl_spark.functions.graph import (
+        csr_adjacency,
+        symmetrize,
+        vertices_of,
+    )
     from communitydetection_jl_spark.operators.lpa import lpa_superstep
 
     edges, _ = fx.karate(spark)
     labels = vertices_of(edges).select("id", F.col("id").alias("lbl"))
-    bare = symmetrize(edges).select("src", "dst")
+    csr = csr_adjacency(symmetrize(edges).select("src", "dst"), "dst", "src", "srcs")
     voted = symmetrize(edges).select("src", "dst", F.lit(1.0).alias("vote"))
-    a = lpa_superstep(bare, labels).orderBy("id").collect()
+    a = lpa_superstep(csr, labels).orderBy("id").collect()
     b = lpa_superstep(voted, labels).orderBy("id").collect()
     assert [(r.id, r.lbl, r.changed) for r in a] == [
         (r.id, r.lbl, r.changed) for r in b
@@ -362,48 +367,103 @@ def test_hlpa_record_quality(spark):
     assert nmi(res.membership, truth) == pytest.approx(1.0)
 
 
-def test_lpa_delta_counts_exact(spark):
+def _lpa_with(monkeypatch, edges, consts, **kw):
+    """lpa() with the plan gate's module constants set to ``consts``."""
+    from communitydetection_jl_spark.operators import lpa as lpa_mod
+
+    with monkeypatch.context() as mp:
+        for k, v in consts.items():
+            mp.setattr(lpa_mod, k, v)
+        return lpa(edges, **kw)
+
+
+# a negative fraction or cap disables its path (a quiet superstep has
+# fbound + movers = 0, so 0 would not); 3.0 > 1 covers the
+# Σ(deg+1)+movers bound even when every vertex moves
+_NO_DELTA = {"_DELTA_MSGS_FRAC": -1.0}
+_FORCE_DELTA = {"_DELTA_MSGS_FRAC": 3.0}
+
+
+def test_lpa_delta_counts_exact(spark, monkeypatch):
     """The incremental (delta-counts) superstep is EXACTLY equivalent
     to full re-aggregation: identical per-superstep mover counts and
     identical final labels, with the counts path forced to engage from
-    superstep 2 (delta_msgs_frac > 1 covers the Σ(deg+1)+wants bound
-    even when every vertex moves). Both storage modes."""
+    superstep 2. Both storage modes."""
     for mode in ("dir", "tables"):
         for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
             edges, _ = fixture(spark)
-            full = lpa(edges, max_iter=30, mode=mode, delta=False,
-                       state_name=f"lpa_nd_{mode}_{name}")
-            dl = lpa(edges, max_iter=30, mode=mode, delta=True,
-                     delta_msgs_frac=3.0, state_name=f"lpa_dl_{mode}_{name}")
-            assert dl.delta_from is not None and dl.delta_from <= 3, (mode, name)
+            full = _lpa_with(monkeypatch, edges, _NO_DELTA, max_iter=30,
+                             mode=mode, state_name=f"lpa_nd_{mode}_{name}")
+            dl = _lpa_with(monkeypatch, edges, _FORCE_DELTA, max_iter=30,
+                           mode=mode, state_name=f"lpa_dl_{mode}_{name}")
+            assert full.delta_from is None, (mode, name)
+            assert dl.delta_from == 2, (mode, name)
             assert full.changed_history == dl.changed_history, (mode, name)
             a = {(r.id, r.comm) for r in full.labels.collect()}
             b = {(r.id, r.comm) for r in dl.labels.collect()}
             assert a == b, (mode, name)
 
 
-def test_lpa_delta_shuffle_join_exact(spark):
+def test_lpa_delta_shuffle_join_exact(spark, monkeypatch):
     """The above-broadcast-cap delta path (movers shipped through a
     bucketed hash(dst, P) shuffle join instead of a driver broadcast)
-    is the SAME counts-table semantics: with delta_bcast_max=0 every
-    incremental superstep is forced through the shuffle join, and the
-    run must still match the full re-aggregation mover-for-mover and
-    label-for-label. This is the 100×-scale regime (sustained
-    multi-million-mover supersteps) exercised at test scale. Both
-    storage modes."""
+    is the SAME counts-table semantics: with a negative broadcast cap
+    every incremental superstep is forced through the shuffle join (a
+    spy on _apply_moves proves it ran), and the run must still match
+    the full re-aggregation mover-for-mover and label-for-label. This
+    is the 100×-scale regime (sustained multi-million-mover
+    supersteps) exercised at test scale. Both storage modes."""
+    from communitydetection_jl_spark.operators import lpa as lpa_mod
+
+    orig = lpa_mod._apply_moves
     for mode in ("dir", "tables"):
         for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
             edges, _ = fixture(spark)
-            full = lpa(edges, max_iter=30, mode=mode, delta=False,
-                       state_name=f"lpa_nds_{mode}_{name}")
-            dl = lpa(edges, max_iter=30, mode=mode, delta=True,
-                     delta_msgs_frac=3.0, delta_bcast_max=0,
-                     state_name=f"lpa_dls_{mode}_{name}")
-            assert dl.delta_from is not None and dl.delta_from <= 3, (mode, name)
+            full = _lpa_with(monkeypatch, edges, _NO_DELTA, max_iter=30,
+                             mode=mode, state_name=f"lpa_nds_{mode}_{name}")
+            seen = []
+
+            def spy(*a, **kw):
+                seen.append(a[3])  # broadcast
+                return orig(*a, **kw)
+
+            dl = _lpa_with(monkeypatch, edges,
+                           {**_FORCE_DELTA, "_DELTA_BCAST_MAX": -1,
+                            "_apply_moves": spy},
+                           max_iter=30, mode=mode,
+                           state_name=f"lpa_dls_{mode}_{name}")
+            assert seen and not any(seen), (mode, name, seen)
+            assert dl.delta_from == 2, (mode, name)
             assert full.changed_history == dl.changed_history, (mode, name)
             a = {(r.id, r.comm) for r in full.labels.collect()}
             b = {(r.id, r.comm) for r in dl.labels.collect()}
             assert a == b, (mode, name)
+
+
+def test_lpa_no_counts_table_after_last_superstep(spark, monkeypatch):
+    """The delta gate builds the counts table at the top of the
+    superstep that uses it, never after the last one: with delta forced
+    to engage, a max_iter=1 run initialises no ``*_cnt`` StateLoop,
+    while a max_iter=2 run (whose superstep 2 runs delta counts) does."""
+    from communitydetection_jl_spark.operators import lpa as lpa_mod
+
+    inits = []
+
+    class SpyLoop(lpa_mod.StateLoop):
+        def init(self, df, start_iter=0):
+            inits.append(self.base_name)
+            return super().init(df, start_iter)
+
+    edges, _ = fx.ring_of_cliques(spark)
+    for max_iter, want_cnt in ((1, False), (2, True)):
+        inits.clear()
+        res = _lpa_with(monkeypatch, edges,
+                        {**_FORCE_DELTA, "StateLoop": SpyLoop},
+                        max_iter=max_iter, state_name=f"lpa_nc{max_iter}")
+        assert res.iterations == max_iter
+        assert inits, max_iter
+        assert any(n.endswith("_cnt") for n in inits) == want_cnt, (max_iter, inits)
+        assert (res.delta_from == 2) == want_cnt, max_iter
 
 
 def test_lpa_id_shift_invariance(spark):
@@ -429,7 +489,7 @@ def test_lpa_id_shift_invariance(spark):
         assert a == b, mode
 
 
-def test_lpa_strategy_invariance(spark):
+def test_lpa_strategy_invariance(spark, monkeypatch):
     """Execution strategy must never change the answer: the semi-sync
     active-parity listener filter, the two-superstep (changed|prevch)
     broadcast frontier, and the delta-counts path are all pure
@@ -437,22 +497,44 @@ def test_lpa_strategy_invariance(spark):
     plain dir mode, tables with frontier+delta disabled, tables with a
     force-engaged frontier, tables with force-engaged delta — must
     produce the per-superstep mover counts and final labels of the
-    independent NumPy replay."""
+    independent NumPy replay. A spy on lpa_superstep records which
+    gathers ran with the frontier filter: the frontier run must have
+    run some, the bare run none."""
+    from communitydetection_jl_spark.operators import lpa as lpa_mod
+
+    orig = lpa_mod.lpa_superstep
+    frontier_gathers: dict = {}
+
+    def spying(key, consts):
+        frontier_gathers[key] = []
+
+        def spy(*a, **kw):
+            frontier_gathers[key].append(kw.get("active") is not None)
+            return orig(*a, **kw)
+
+        return {**consts, "lpa_superstep": spy}
+
     for fixture, name in ((fx.ring_of_cliques, "rc"), (fx.gn, "gn")):
         edges, _ = fixture(spark)
         want, movers = _np_lpa_of(edges, 30)
         runs = {
             "dir": lpa(edges, max_iter=30, mode="dir",
                        state_name=f"lpa_si_dir_{name}"),
-            "bare": lpa(edges, max_iter=30, mode="tables", frontier=False,
-                        delta=False, state_name=f"lpa_si_bare_{name}"),
-            "frontier": lpa(edges, max_iter=30, mode="tables", delta=False,
-                            frontier_max=10**9,
-                            state_name=f"lpa_si_fr_{name}"),
-            "delta": lpa(edges, max_iter=30, mode="tables",
-                         delta_msgs_frac=3.0,
-                         state_name=f"lpa_si_dl_{name}"),
+            "bare": _lpa_with(monkeypatch, edges, spying(
+                ("bare", name), {**_NO_DELTA, "_FRONTIER_MAX": -1}),
+                max_iter=30, mode="tables", state_name=f"lpa_si_bare_{name}"),
+            "frontier": _lpa_with(monkeypatch, edges, spying(
+                ("frontier", name), {**_NO_DELTA, "_FRONTIER_MAX": 10**9}),
+                max_iter=30, mode="tables", state_name=f"lpa_si_fr_{name}"),
+            "delta": _lpa_with(monkeypatch, edges, _FORCE_DELTA,
+                               max_iter=30, mode="tables",
+                               state_name=f"lpa_si_dl_{name}"),
         }
+        assert any(frontier_gathers[("frontier", name)]), name
+        assert frontier_gathers[("bare", name)], name
+        assert not any(frontier_gathers[("bare", name)]), name
+        assert runs["bare"].delta_from is None, name
+        assert runs["delta"].delta_from == 2, name
         hist = {k: r.changed_history for k, r in runs.items()}
         assert all(h == movers for h in hist.values()), (name, movers, hist)
         for k, res in runs.items():

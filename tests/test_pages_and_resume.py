@@ -76,15 +76,15 @@ def test_pagerank_resume_from_checkpoint(spark, tmp_path, pages):
 
     full = pagerank(edges, tol=1e-9, max_iter=60)
 
-    # run A: stop early at 6 iterations, snapshot every 3
-    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="r1", snapshot_every=3)
+    # run A: stop early at 6 iterations
+    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="r1")
     partial = pagerank(edges, tol=1e-9, max_iter=6, ledger=ledgerA)
     assert partial.iterations == 6
     mets = ledgerA.metrics()
     assert [m["iter"] for m in mets] == [1, 2, 3, 4, 5, 6]
 
-    # run B: resume from the snapshot, converge
-    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="r1", snapshot_every=3)
+    # run B: resume from iteration 6's state, converge
+    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="r1")
     resumed = pagerank(edges, tol=1e-9, max_iter=60, ledger=ledgerB)
     assert resumed.iterations > 6  # continued, not restarted
 
@@ -95,8 +95,8 @@ def test_pagerank_resume_from_checkpoint(spark, tmp_path, pages):
 
 
 def test_lpa_resume_from_checkpoint(spark, tmp_path, pages):
-    """Mid-algorithm resume for LPA: run A stops early with snapshots,
-    run B resumes from the latest snapshot and must converge to the
+    """Mid-algorithm resume for LPA: run A stops early, run B resumes
+    from its newest state and must converge to the
     SAME labels as an uninterrupted run (semi-sync LPA is deterministic,
     so resume-equivalence is exact)."""
     from communitydetection_jl_spark.operators.lpa import lpa
@@ -106,13 +106,13 @@ def test_lpa_resume_from_checkpoint(spark, tmp_path, pages):
 
     full = lpa(edges, max_iter=40)
 
-    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="lpa1", snapshot_every=2)
+    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="lpa1")
     partial = lpa(edges, max_iter=4, ledger=ledgerA)
     assert partial.iterations == 4
 
-    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="lpa1", snapshot_every=2)
+    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="lpa1")
     resumed = lpa(edges, max_iter=40, ledger=ledgerB)
-    assert resumed.iterations > 4  # continued from iteration 4's snapshot
+    assert resumed.iterations > 4  # continued from iteration 4's state
 
     a = {r.id: r.comm for r in full.labels.collect()}
     b = {r.id: r.comm for r in resumed.labels.collect()}
@@ -131,10 +131,10 @@ def test_components_resume_from_checkpoint(spark, tmp_path, pages):
 
     full = {r.id: r.comp for r in connected_components(edges).collect()}
 
-    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="cc1", snapshot_every=1)
+    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="cc1")
     connected_components(edges, max_rounds=2, ledger=ledgerA)
 
-    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="cc1", snapshot_every=1)
+    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="cc1")
     resumed = {
         r.id: r.comp
         for r in connected_components(edges, ledger=ledgerB).collect()
@@ -143,15 +143,48 @@ def test_components_resume_from_checkpoint(spark, tmp_path, pages):
 
 
 def test_extract_edges_jvm_equals_pandas(spark, pages):
-    """The codegen regexp_extract_all path and the Arrow pandas-UDF
-    path must produce identical (src, dst, weight) edge tables — the
-    JVM default is a pure execution-strategy change."""
-    from communitydetection_jl_spark.sources.pages import extract_edges
+    """extract_edges' codegen regexp_extract_all href extractor and the
+    Arrow pandas-UDF reference must agree row by row — the same href
+    array, in order — over the latest captures extract_edges reads."""
+    from communitydetection_jl_spark.sources.pages import extract_hrefs_expr
 
-    jvm = extract_edges(pages, engine="jvm")
-    pd_ = extract_edges(pages, engine="pandas")
-    assert jvm.exceptAll(pd_).count() == 0
-    assert pd_.exceptAll(jvm).count() == 0
+    rows = latest_captures(pages).select(
+        "url",
+        extract_hrefs_expr("text").alias("jvm"),
+        extract_hrefs("text").alias("pd"),
+    ).collect()
+    assert len(rows) == 300
+    assert sum(len(r.jvm) for r in rows) > 0
+    bad = [r.url for r in rows if list(r.jvm) != list(r.pd)]
+    assert not bad, bad[:5]
+
+
+def test_lpa_async_resume_from_checkpoint(spark, tmp_path, pages):
+    """Mid-algorithm resume for shard-local async LPA: run A stops after
+    2 rounds, run B resumes from round 2's state. Every round's RNG is
+    seeded by its number, so B must end with the SAME labels and the
+    rest of the uninterrupted run's mover history."""
+    from communitydetection_jl_spark.operators.lpa_async import lpa_async
+
+    edges = restrict_to_corpus(extract_edges(pages), url_dim(latest_captures(pages)))
+    edges = edges.localCheckpoint(eager=True)
+
+    full = lpa_async(edges, n_shards=4, seed=7)
+    assert full.rounds > 3
+
+    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="alpa1")
+    partial = lpa_async(edges, n_shards=4, seed=7, max_rounds=2, ledger=ledgerA)
+    assert partial.rounds == 2
+    assert [m["iter"] for m in ledgerA.metrics()] == [1, 2]
+
+    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="alpa1")
+    resumed = lpa_async(edges, n_shards=4, seed=7, ledger=ledgerB)
+    assert resumed.rounds == full.rounds
+    assert partial.changed_history + resumed.changed_history == full.changed_history
+
+    a = {r.id: r.comm for r in full.labels.collect()}
+    b = {r.id: r.comm for r in resumed.labels.collect()}
+    assert a == b
 
 
 def test_href_unicode_whitespace_parity(spark):
