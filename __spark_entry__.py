@@ -606,15 +606,14 @@ def q_lpa_full(spark, sf_dir):
 def q_louvain(spark, sf_dir):
     """Modularity Louvain (src/Optimiser.jl:135-144 + MPartition).
 
-    The louvain/infomap family is deliberately rows-only at the driver
-    gate: sweeps move many vertices per superstep behind a hash-parity
-    conflict gate and finish with a driver-local exact phase — the
-    result is deterministic but replaying it needs the engine itself,
-    not ANSI SQL (unlike the LPA/SLPA/hlpa/k-clique family, all
-    SQL-oracled end to end). Correctness evidence instead: the six
-    objective FUNCTIONS are each driver-oracled (modularity_score,
-    rber/significance/surprise_score, map_equation), and pytest pins
-    NMI=1.0 against planted partitions plus monotone-quality sweeps
+    The production run itself is rows-only at the driver gate: its
+    sweeps move many vertices per superstep behind the xxhash64 parity
+    gate, which ANSI SQL cannot reproduce. Every piece of it is
+    value-hashed elsewhere: the distributed sweep and the two-level
+    sweep → collapse → projection composition by the id-parity det
+    twins (louvain_det, louvain_all_det), the driver-local exact phase
+    by louvain_locals, and the objective functions by their score rows;
+    pytest pins NMI=1.0 against planted partitions
     (tests/test_communities.py)."""
     from communitydetection_jl_spark.operators.louvain import louvain
 
@@ -675,7 +674,7 @@ def q_louvain_cpm_local(spark, sf_dir):
 def q_louvain_rber_local(spark, sf_dir):
     """Full RBER Louvain (gamma=1) on the partkey<=60 slice — the
     engine reduces RBER to CPM with penalty gamma*density
-    (operators/louvain.py:622-624; ref src/MPartition.jl:483-533);
+    (operators/louvain.py: louvain; ref src/MPartition.jl:483-533);
     the oracle mirrors the same reduction, with density = m/(n(n-1)/2)
     an exact rational so gain ties replay exactly."""
     from communitydetection_jl_spark.operators.louvain import louvain
@@ -687,7 +686,7 @@ def q_louvain_rber_local(spark, sf_dir):
 def q_louvain_significance_local(spark, sf_dir):
     """Full Significance Louvain on the partkey<=60 slice — the
     engine's set-based driver-local greedy (_local_setbased,
-    operators/louvain.py:163-278; ref src/MPartition.jl:536-604)
+    operators/louvain.py; ref src/MPartition.jl:536-604)
     replayed move by move by _setbased_local_oracle. The full-graph
     q_louvain_significance stays rows-only."""
     from communitydetection_jl_spark.operators.louvain import louvain
@@ -889,10 +888,11 @@ def q_infomap(spark, sf_dir):
     """Map-equation-minimizing communities (Infomap, operators/infomap.py;
     reference entry point flow_partition + optimize_partition!,
     src/FlowPartition.jl + src/Optimiser.jl in minimize mode).
-    Rows-only for the same reason as q_louvain (hash-gated sweeps +
-    driver-local phase); the map-equation OBJECTIVE itself is
-    driver-oracled (map_equation) and pytest pins codelength descent
-    + fixture partitions (tests/test_infomap.py)."""
+    Rows-only for the same reason as q_louvain (xxhash64-gated sweeps);
+    its sweep and two-level composition are hashed by infomap_det and
+    infomap_all_det, its driver-local phase by infomap_locals, and the
+    map-equation objective by map_equation. pytest pins codelength
+    descent + fixture partitions (tests/test_infomap.py)."""
     from communitydetection_jl_spark.operators.infomap import infomap
 
     return infomap(_part_edges(spark, sf_dir)).membership
@@ -901,7 +901,7 @@ def q_infomap(spark, sf_dir):
 def q_infomap_local(spark, sf_dir):
     """Full undirected Infomap on the partkey<=60 slice — the engine's
     driver-local exact map-equation greedy (_local_infomap,
-    operators/infomap.py:72-156; ref src/Optimiser.jl:148-254 +
+    operators/infomap.py; ref src/Optimiser.jl:148-254 +
     src/FlowPartition.jl) replayed move by move by the recursive-CTE
     oracle (_infomap_local_oracle). The full-graph q_infomap stays
     rows-only. Replay robustness: the dL comparison uses eps=1e-10
@@ -1472,25 +1472,13 @@ def q_infomap_det(spark, sf_dir):
     by drift. The production infomap() keeps the unquantized score
     and the xxhash64 gate; this row pins the sweep's join/agg/window
     structure and the ΔL formula itself."""
-    from communitydetection_jl_spark.operators.infomap import _distributed_level
+    from communitydetection_jl_spark.operators.infomap import (
+        _distributed_level,
+        _flow_graph,
+    )
 
-    e = _part_edges_min2(spark, sf_dir)
-    m = float(e.agg(F.sum("weight")).collect()[0][0] or 0.0)
-    sym_w = e.select(F.col("src").alias("id"), "weight").unionByName(
-        e.select(F.col("dst").alias("id"), "weight"))
-    arcs = e.filter(F.col("src") != F.col("dst")).select(
-        "src", "dst", (F.col("weight") / (2 * m)).alias("t"))
-    t_out = (
-        arcs.select(F.col("src").alias("id"), "t")
-        .unionByName(arcs.select(F.col("dst").alias("id"), "t"))
-        .groupBy("id").agg(F.sum("t").alias("t_out"))
-    )
-    flows = (
-        sym_w.groupBy("id").agg((F.sum("weight") / (2 * m)).alias("p"))
-        .join(t_out, "id", "left")
-        .select("id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out"))
-    )
-    memb = _distributed_level(
+    arcs, flows, _ = _flow_graph(_part_edges_min2(spark, sf_dir))
+    memb, _info = _distributed_level(
         arcs, flows, eps=1e-6, max_sweeps=6, move_floor=0.0,
         parity_expr=F.pmod(F.col("id"), F.lit(2)), score_round=5)
     return memb.select("id", "comm")
@@ -1557,53 +1545,22 @@ def q_infomap_all_det(spark, sf_dir):
     _infomap_det_oracle with the collapse aggregation, coarse flows and
     a second recursive sweep loop."""
     from communitydetection_jl_spark.operators.coarsen import from_coarser_partition
-    from communitydetection_jl_spark.operators.infomap import _distributed_level
+    from communitydetection_jl_spark.operators.infomap import (
+        _collapse_flows,
+        _distributed_level,
+        _flow_graph,
+    )
 
     parity = F.pmod(F.col("id"), F.lit(2))
-    e = _part_edges_min2(spark, sf_dir)
-    m = float(e.agg(F.sum("weight")).collect()[0][0] or 0.0)
-    sym_w = e.select(F.col("src").alias("id"), "weight").unionByName(
-        e.select(F.col("dst").alias("id"), "weight"))
-    arcs = e.filter(F.col("src") != F.col("dst")).select(
-        "src", "dst", (F.col("weight") / (2 * m)).alias("t"))
-
-    def _flows_of(arc_df, p_df):
-        t_out = (
-            arc_df.select(F.col("src").alias("id"), "t")
-            .unionByName(arc_df.select(F.col("dst").alias("id"), "t"))
-            .groupBy("id").agg(F.sum("t").alias("t_out"))
-        )
-        return p_df.join(t_out, "id", "left").select(
-            "id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out"))
-
-    p0 = sym_w.groupBy("id").agg((F.sum("weight") / (2 * m)).alias("p"))
-    flows = _flows_of(arcs, p0)
-    l0 = _distributed_level(
+    arcs, flows, _ = _flow_graph(_part_edges_min2(spark, sf_dir))
+    l0, _ = _distributed_level(
         arcs, flows, eps=1e-6, max_sweeps=6, move_floor=0.0,
         parity_expr=parity, score_round=5)
-    mm = l0.select("id", "comm")
-    # flow collapse: inter-community arcs only (infomap.py:391-423)
-    joined = (
-        arcs.join(mm.select(F.col("id").alias("src"),
-                            F.col("comm").alias("cs")), "src")
-        .join(mm.select(F.col("id").alias("dst"),
-                        F.col("comm").alias("cd")), "dst")
-        .filter(F.col("cs") != F.col("cd"))
-    )
-    arcs1 = (
-        joined.select(F.least("cs", "cd").alias("src"),
-                      F.greatest("cs", "cd").alias("dst"), "t")
-        .groupBy("src", "dst").agg(F.sum("t").alias("t"))
-    )
-    p1 = (
-        flows.select("id", "p").join(mm, "id")
-        .groupBy(F.col("comm").alias("id")).agg(F.sum("p").alias("p"))
-    )
-    flows1 = _flows_of(arcs1, p1)
-    l1 = _distributed_level(
+    arcs1, flows1 = _collapse_flows(arcs, flows, l0)
+    l1, _ = _distributed_level(
         arcs1, flows1, eps=1e-6, max_sweeps=6, move_floor=0.0,
         parity_expr=parity, score_round=5, level=1)
-    memb = from_coarser_partition(mm, l1.select("id", "comm"))
+    memb = from_coarser_partition(l0, l1)
     return memb.select("id", "comm")
 
 
@@ -2458,7 +2415,7 @@ def _lpa_record_oracle() -> str:
 
 def _louvain_local_oracle(mode: str) -> str:
     """The driver-local exact Louvain phase (_local_louvain,
-    operators/louvain.py:56-143; ref src/Optimiser.jl:135-144 +
+    operators/louvain.py; ref src/Optimiser.jl:135-144 +
     src/MPartition.jl) replayed ONE NODE VISIT PER RECURSIVE ITERATION,
     multi-level included.
 
@@ -2482,7 +2439,7 @@ def _louvain_local_oracle(mode: str) -> str:
 
     ``mode``: 'modularity' (k2/tot2 = strengths, penalty 1/(2m)),
     'cpm' (k2/tot2 = block/community node counts, penalty gamma=0.5),
-    'rber' (CPM with penalty gamma*density, operators/louvain.py:622)."""
+    'rber' (CPM with penalty gamma*density, as louvain() reduces it)."""
     if mode == "modularity":
         pen = "(SELECT 1.0 / (2.0 * m) FROM mc)"
         k2u = "SUM(CASE WHEN NOT mark AND vblk = u THEN w ELSE 0 END) OVER ()"
@@ -2615,7 +2572,7 @@ def _louvain_local_oracle(mode: str) -> str:
 
 def _infomap_local_oracle() -> str:
     """The driver-local exact Infomap greedy (_local_infomap,
-    operators/infomap.py:72-156) replayed ONE NODE VISIT PER RECURSIVE
+    operators/infomap.py) replayed ONE NODE VISIT PER RECURSIVE
     ITERATION — the Louvain interpreter skeleton (blk/comm state,
     partner-row transports, min-pending visit order, collapse = blk :=
     comm after a quiet pass) with the map-equation dL of
@@ -2775,7 +2732,7 @@ def _infomap_local_oracle() -> str:
 
 def _setbased_local_oracle(objective: str) -> str:
     """The set-based driver-local greedy (_local_setbased,
-    operators/louvain.py:163-278) replayed one visit per recursive
+    operators/louvain.py) replayed one visit per recursive
     iteration — the Louvain interpreter skeleton with Significance
     (sum_c C(n_c,2)*KL(p_c||p), src/MPartition.jl:536-604) or Surprise
     (m*KL(m_in/m || poss_in/poss), src/MPartition.jl:333-385) gains:
@@ -2930,7 +2887,7 @@ def _infomap_directed_local_oracle() -> str:
     tol=1e-10 — matches the engine solver to ~1e-17 on this slice)
     produces visit probabilities; flows f = p * (w/odeg), dangling
     nodes carry iso = p; then the one-visit-per-iteration interpreter
-    replays _local_infomap_directed (operators/infomap.py:424-531)
+    replays _local_infomap_directed (operators/infomap.py)
     with the DiFlowPartition exit-probability deltas: per-community
     (size, p, iso, out-flow) masses from marker/arc windows, each
     directed arc mirrored into an out row and an in row so both
@@ -4456,13 +4413,13 @@ def _louvain_all_det_oracle() -> str:
     """The FULL two-level distributed Louvain composition
     (q_louvain_all_det) replayed in SQL: level-0 parity sweeps (the
     _louvain_det_oracle recursion verbatim via _louvain_sweep_block),
-    the collapse_graph contraction (operators/coarsen.py:28: canonical
+    the collapse_graph contraction (operators/coarsen.py: canonical
     LEAST/GREATEST community endpoints, summed weights — exact integer
     sums so both engines agree bitwise), level-1 strengths recomputed
     from the collapsed graph WITH self-loops counted twice (MGraph
-    semantics, operators/louvain.py:285), a second sweep recursion on
+    semantics, louvain._strengths), a second sweep recursion on
     the self-loop-free collapsed symmetrized view, and the
-    from_coarser_partition projection join (coarsen.py:74). This is
+    from_coarser_partition projection join (operators/coarsen.py). This is
     optimize_partition!'s level loop (ref src/Optimiser.jl:112-133) as
     one hash-checked artifact."""
     return f"""
@@ -4603,7 +4560,7 @@ def _infomap_all_det_oracle() -> str:
     """The FULL two-level distributed Infomap composition
     (q_infomap_all_det) in SQL: level-0 parity sweeps (the
     _infomap_det_oracle recursion verbatim via _infomap_sweep_block),
-    the FLOW collapse (operators/infomap.py:391-423 / ref
+    the FLOW collapse (infomap._collapse_flows / ref
     src/FlowPartition.jl:207-252: INTER-community arcs only with
     canonically-summed t, p_c as member-p sums, t_out recomputed from
     the collapsed arcs), a second sweep recursion on the coarse flow

@@ -36,10 +36,10 @@ src/MultiGreedy.jl:1-34):
     faithful sequential greedy minimizing L (deterministic sweep
     order), matching the reference at fixture scale.
 
-The directed-with-teleport objective is scored by
-objectives.map_equation_directed; its optimizer (teleport terms make
-Δq depend on community *sizes* too, src/DiFlowPartition.jl:218-302)
-is out of v1 scope.
+``infomap_directed`` runs the same skeleton on the directed flow graph
+with teleportation (DiFlowPartition, below). The sweep loop, the level
+loop and the StateLoop under them are coarsen.py's, shared with
+Louvain.
 """
 
 from __future__ import annotations
@@ -57,12 +57,33 @@ from ..functions.graph import (
     plogp,
     vertices_of,
 )
-from .coarsen import from_coarser_partition, renumber_communities
+from .coarsen import (
+    move_parity,
+    optimize_levels,
+    recurse_local,
+    renumber_communities,
+    sweep_level,
+)
 from .objectives import map_equation
 
 
 def _plogp(x: float) -> float:
     return x * math.log(x) if x > 0 else 0.0
+
+
+def _delta_l(pl, sum_q, pl_sum_q, q_cur, q_new, q_cur2, q_new2, p_cur, p_new, p):
+    """ΔL of moving a node of visit prob ``p`` from community cur to new
+    (diff_move, src/FlowPartition.jl:147-188), given both communities'
+    exit probs before (q) and after (q2) the move and their visit probs
+    before it; the Σ_v plogp(p_v) term is constant under moves. ``pl``
+    is plogp over floats (driver-local solvers) or columns (sweeps)."""
+    sum_q2 = sum_q + (q_cur2 - q_cur) + (q_new2 - q_new)
+    return (
+        pl(sum_q2) - pl_sum_q
+        - 2.0 * (pl(q_cur2) + pl(q_new2) - pl(q_cur) - pl(q_new))
+        + pl(q_cur2 + p_cur - p) + pl(q_new2 + p_new + p)
+        - pl(q_cur + p_cur) - pl(q_new + p_new)
+    )
 
 
 # ----------------------------------------------------------------------
@@ -71,7 +92,7 @@ def _plogp(x: float) -> float:
 
 def _local_infomap(pairs, p, eps=1e-12, max_sweeps=100):
     """Sequential greedy map-equation minimization on (u, v, t_uv)
-    arc-probability pairs (canonical u<=v, self-loops excluded) with
+    arc-probability pairs (canonical u<=v, self-loops ignored) with
     per-node visit probs ``p``. Returns dict id -> community.
 
     Re-derives move_nodes! in minimize mode (src/Optimiser.jl:148-254 +
@@ -103,14 +124,8 @@ def _local_infomap(pairs, p, eps=1e-12, max_sweeps=100):
         t_uc = sum(t for v, t in adj[u].items() if comm[v] == c)
         qcu2 = q_c[cu] - tu + 2.0 * t_ucu
         qc2 = q_c[c] + tu - 2.0 * t_uc
-        sq2 = sum_q + (qcu2 - q_c[cu]) + (qc2 - q_c[c])
-        pu = p.get(u, 0.0)
-        return (
-            _plogp(sq2) - _plogp(sum_q)
-            - 2.0 * (_plogp(qcu2) + _plogp(qc2) - _plogp(q_c[cu]) - _plogp(q_c[c]))
-            + _plogp(qcu2 + p_c[cu] - pu) + _plogp(qc2 + p_c[c] + pu)
-            - _plogp(q_c[cu] + p_c[cu]) - _plogp(q_c[c] + p_c[c])
-        ), qcu2, qc2
+        return _delta_l(_plogp, sum_q, _plogp(sum_q), q_c[cu], q_c[c], qcu2, qc2,
+                        p_c[cu], p_c[c], p.get(u, 0.0)), qcu2, qc2
 
     improved_any = True
     sweeps = 0
@@ -135,25 +150,9 @@ def _local_infomap(pairs, p, eps=1e-12, max_sweeps=100):
                 comm[u] = c
                 improved_any = True
 
-    n_comms = len(set(comm.values()))
-    if n_comms < len(nodes):
-        agg = defaultdict(float)
-        cp = defaultdict(float)
-        for u in nodes:
-            cp[comm[u]] += p.get(u, 0.0)
-        for u, v, t in pairs:
-            a, b = comm[u], comm[v]
-            if a == b:
-                continue
-            lo, hi = (a, b) if a <= b else (b, a)
-            agg[(lo, hi)] += t
-        coarse = _local_infomap(
-            [(a, b, t) for (a, b), t in agg.items()], dict(cp),
-            eps=eps, max_sweeps=max_sweeps,
-        )
-        if len(set(coarse.values())) < n_comms:
-            comm = {u: coarse[comm[u]] for u in comm}
-    return comm
+    return recurse_local(
+        pairs, nodes, comm, lambda u: p.get(u, 0.0),
+        lambda cp, cs: _local_infomap(cp, cs, eps=eps, max_sweeps=max_sweeps))
 
 
 # ----------------------------------------------------------------------
@@ -163,29 +162,18 @@ def _local_infomap(pairs, p, eps=1e-12, max_sweeps=100):
 def _infomap_sweep(sym: DataFrame, memb: DataFrame, flows: DataFrame,
                    parity: int, eps: float, parity_expr=None,
                    score_round: int | None = None) -> DataFrame:
-    """One bulk ΔL-scoring sweep; returns (id, comm, moved).
+    """One bulk ΔL-scoring sweep; returns (id, comm, moved, gain).
 
     ``sym``: the level's SYMMETRIZED (src, dst, t) arc-prob view
-    (self-loops excluded), materialized once per level by
-    ``_distributed_level`` — the louvain.py per-level side-table
-    discipline (rebuilding it per sweep re-unioned and re-shuffled the
-    2m rows every sweep). ``flows``: (id, p, t_out). One m-sized
+    (self-loops excluded), built once per level by ``_distributed_level``
+    through ``StateLoop.side``. ``flows``: (id, p, t_out). One m-sized
     shuffle (the t_uc gather); comm stats and Σq derive from it.
-
-    ``parity_expr``: overrides the hash-parity conflict gate with a
-    SQL-replayable expression (e.g. ``pmod(id, 2)``) — the louvain.py
-    trick that lets a DuckDB recursive CTE replay the sweep
-    (infomap_det oracle). Default: xxhash64 parity.
+    ``parity_expr``: see coarsen.move_parity.
 
     ``score_round``: round ΔL to this many decimals BEFORE the argmin
-    and the accept gate. Unlike louvain's integer-valued modularity
-    gains, ΔL is a log combination whose last-ulp value differs across
-    engines (sum order, libm log); quantizing the DECISION value makes
-    both engines see the same score ladder whenever the true ΔL sits
-    farther from a rounding boundary than the cross-engine drift
-    (~1e-12 absolute here vs the 5e-6 half-quantum at 5 decimals —
-    verified empirically on the oracle slice). Production sweeps keep
-    the unquantized score (default None)."""
+    and the accept gate, so the infomap_det row and its SQL replay see
+    the same score ladder despite last-ulp drift of the log terms across
+    engines (see q_infomap_det). Production sweeps keep None."""
     mm = memb.select("id", F.col("comm").alias("c"))
     # t(u → community of neighbor); materialized — reused by the stats
     # agg AND the scoring join without re-shuffling m rows
@@ -219,23 +207,19 @@ def _infomap_sweep(sym: DataFrame, memb: DataFrame, flows: DataFrame,
     )
     q_cur2 = F.col("q_cur") - F.col("t_out") + 2.0 * F.col("t_ucu")
     q_new2 = F.col("q_new") + F.col("t_out") - 2.0 * F.col("t_uc")
-    sum_q2 = F.lit(sum_q) + (q_cur2 - F.col("q_cur")) + (q_new2 - F.col("q_new"))
-    dl = (
-        plogp(sum_q2) - F.lit(_plogp(sum_q))
-        - 2.0 * (plogp(q_cur2) + plogp(q_new2)
-                 - plogp(F.col("q_cur")) - plogp(F.col("q_new")))
-        + plogp(q_cur2 + F.col("p_cur") - F.col("p"))
-        + plogp(q_new2 + F.col("p_new") + F.col("p"))
-        - plogp(F.col("q_cur") + F.col("p_cur"))
-        - plogp(F.col("q_new") + F.col("p_new"))
-    )
+    dl = _delta_l(plogp, F.lit(sum_q), F.lit(_plogp(sum_q)), F.col("q_cur"),
+                  F.col("q_new"), q_cur2, q_new2, F.col("p_cur"), F.col("p_new"),
+                  F.col("p"))
     if score_round is not None:
         dl = F.round(dl, score_round)
-    gate = (
-        (parity_expr == F.lit(parity))
-        if parity_expr is not None
-        else (F.pmod(F.xxhash64("id"), F.lit(2)) == F.lit(parity))
-    )
+    return _moves(mm, cand, dl, eps, move_parity(parity_expr) == F.lit(parity))
+
+
+def _moves(mm: DataFrame, cand: DataFrame, dl, eps: float, gate) -> DataFrame:
+    """Sweep rows (id, comm, moved, gain): each vertex takes its
+    smallest-ΔL candidate (ties to the smaller community id) when ΔL <
+    −eps and the parity gate lets it move; a mover's gain is its
+    codelength reduction −ΔL."""
     best = (
         cand.withColumn("dl", dl)
         .groupBy("id")
@@ -248,70 +232,92 @@ def _infomap_sweep(sym: DataFrame, memb: DataFrame, flows: DataFrame,
         F.when((F.col("best_dl") < -eps) & gate, F.col("best_c"))
         .otherwise(F.col("c"))
     )
+    moved = new_c != F.col("c")
     return mm.join(best, "id", "left").select(
-        "id", new_c.alias("comm"), (new_c != F.col("c")).alias("moved")
+        "id", new_c.alias("comm"), moved.alias("moved"),
+        F.when(moved, -F.col("best_dl")).otherwise(F.lit(0.0)).alias("gain"),
     )
 
 
 def _distributed_level(arcs: DataFrame, flows: DataFrame, eps: float,
                        max_sweeps: int, move_floor: float, ledger=None,
                        level: int = 0, parity_expr=None,
-                       score_round: int | None = None) -> DataFrame:
-    from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts
+                       score_round: int | None = None) -> tuple[DataFrame, dict]:
+    """One level of bulk ΔL sweeps (coarsen.sweep_level) on the flow
+    graph (arcs (src, dst, t), flows (id, p, t_out)). Returns
+    (membership, info).
 
-    spark = arcs.sparkSession
-    # membership MUST seed from the FLOW table, not vertices_of(arcs):
-    # the flow collapse keeps only inter-community arcs, so a community
-    # with no external links (an absorbed connected component — common
-    # on multi-component web graphs) has flows but NO arcs at the next
-    # level; seeding from arcs silently dropped such nodes from the
-    # level membership and the projection join then lost their members
-    # from the final partition (caught by the infomap_all_det oracle at
-    # sf0.01: 1886 spark rows vs 1892 — six vertices gone). Every node
-    # keeps a partition row in the reference (src/Optimiser.jl:112-133).
-    verts = flows.select("id")
-    # task granularity ∝ level data (see louvain._distributed_level)
-    m_cnt = arcs.count()
-    parts = max(4, min(spark.sparkContext.defaultParallelism, m_cnt // 50_000 + 1))
-    loop = StateLoop(spark, f"infomap_l{level}", bucket_key="id",
-                     parts=parts, ledger=None)
-    flows = flows.persist()
-    low_streak = 0
-    with shuffle_parts(spark, parts), no_aqe(spark):
-        memb = loop.init(verts.select("id", F.col("id").alias("comm")))
-        n = memb.count()
-        flows.count()
-        # symmetrized arc-prob view, materialized ONCE per level as the
-        # loop's side relation (the per-sweep rebuild re-unioned +
-        # re-shuffled 2m rows per sweep)
+    The membership seeds from the FLOW table, not the arcs: the flow
+    collapse keeps only inter-community arcs, so a community with no
+    external links has flows but NO arcs at the next level, and seeding
+    from arcs lost its members (caught by the infomap_all_det oracle at
+    sf0.01: 1886 spark rows vs 1892)."""
+
+    def setup(loop, n):
+        fl = loop.side(flows.repartition(loop.parts, "id"), "id")
         sym = loop.side(
             arcs.select("src", "dst", "t").unionByName(
                 arcs.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst"), "t")
-            ).repartition(parts, "dst"), "dst"
+            ).repartition(loop.parts, "dst"), "dst"
         )
-        for sweep in range(max_sweeps):
-            memb, got = loop.step(
-                _infomap_sweep(sym, memb.select("id", "comm"), flows,
-                               sweep % 2, eps, parity_expr=parity_expr,
-                               score_round=score_round),
-                {"moved": F.sum(F.col("moved").cast("long"))},
-                write_cols=["id", "comm"],
-            )
-            moved = int(got.get("moved") or 0)
-            if ledger is not None:
-                ledger.record(sweep, {"level": level, "moved": moved})
-            if moved <= move_floor * n:
-                low_streak += 1
-                if low_streak >= 2:
-                    break
-            else:
-                low_streak = 0
-    flows.unpersist()
-    # releases sym too, or the hierarchy accumulates one 2m-row side
-    # relation per level
-    loop.cleanup(keep_final=True)
-    return memb.select("id", "comm")
+        return lambda memb, parity: _infomap_sweep(
+            sym, memb, fl, parity, eps, parity_expr=parity_expr,
+            score_round=score_round)
+
+    return sweep_level(flows.select("id"), arcs.count(), setup, "infomap",
+                       level, max_sweeps, move_floor, ledger=ledger)
+
+
+def _flows_of(arcs: DataFrame, p: DataFrame) -> DataFrame:
+    """(id, p, t_out) flows: visit probs ``p`` (id, p) with each node's
+    total arc flow t_out from the undirected ``arcs`` (src, dst, t)."""
+    t_out = (
+        arcs.select(F.col("src").alias("id"), "t")
+        .unionByName(arcs.select(F.col("dst").alias("id"), "t"))
+        .groupBy("id")
+        .agg(F.sum("t").alias("t_out"))
+    )
+    return p.join(t_out, "id", "left").select(
+        "id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out")
+    )
+
+
+def _flow_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame, float]:
+    """Level-0 flow graph of a canonical undirected weighted edge table
+    (flow_partition, src/FlowGraph.jl:9-35): arcs (src, dst, t = w/2m)
+    from the non-self edges and flows (id, p, t_out) with p = weighted
+    degree / 2m (self-loops count 2w). Returns (arcs, flows, m)."""
+    m = float(edges.agg(F.sum("weight")).collect()[0][0] or 0.0)
+    sym_w = edges.select(F.col("src").alias("id"), "weight").unionByName(
+        edges.select(F.col("dst").alias("id"), "weight"))
+    arcs = edges.filter(F.col("src") != F.col("dst")).select(
+        "src", "dst", (F.col("weight") / (2 * m)).alias("t"))
+    p = sym_w.groupBy("id").agg((F.sum("weight") / (2 * m)).alias("p"))
+    return arcs, _flows_of(arcs, p), m
+
+
+def _collapse_flows(arcs: DataFrame, flows: DataFrame,
+                    memb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Collapse the flow graph by ``memb`` (src/FlowPartition.jl:207-252):
+    inter-community arcs only (intra ones never touch q or p), t summed
+    canonically; p_c by member sum, t_out recomputed from the collapsed
+    arcs. Returns (arcs, flows), the arcs materialized."""
+    mm = memb.select("id", "comm")
+    coarse = materialize_iter(
+        arcs.join(mm.select(F.col("id").alias("src"), F.col("comm").alias("cs")), "src")
+        .join(mm.select(F.col("id").alias("dst"), F.col("comm").alias("cd")), "dst")
+        .filter(F.col("cs") != F.col("cd"))
+        .select(F.least("cs", "cd").alias("src"), F.greatest("cs", "cd").alias("dst"), "t")
+        .groupBy("src", "dst")
+        .agg(F.sum("t").alias("t"))
+    )
+    p = (
+        flows.select("id", "p").join(mm, "id")
+        .groupBy(F.col("comm").alias("id"))
+        .agg(F.sum("p").alias("p"))
+    )
+    return coarse, _flows_of(coarse, p)
 
 
 @dataclass
@@ -339,102 +345,26 @@ def infomap(
     the level-0 graph; collapses carry p as community sums and keep
     only inter-community arcs, so every level scores the SAME global L.
     """
-    spark = edges.sparkSession
     base_edges = materialize_iter(canonicalize_undirected(edges))
-    row = base_edges.agg(F.sum("weight").alias("m")).collect()[0]
-    m = float(row["m"] or 0.0)
-    if m <= 0:
-        memb = vertices_of(base_edges).select("id", F.col("id").alias("comm"))
-        return InfomapResult(renumber_communities(memb), 0.0, 0)
-
-    # level-0 flows: p from weighted degree (self-loops count 2w), arcs
-    # from non-self edges
-    sym_w = base_edges.select(F.col("src").alias("id"), "weight").unionByName(
-        base_edges.select(F.col("dst").alias("id"), "weight")
-    )
-    flows = sym_w.groupBy("id").agg((F.sum("weight") / (2 * m)).alias("p"))
-    arcs = (
-        base_edges.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst", (F.col("weight") / (2 * m)).alias("t"))
-    )
-    t_out = (
-        arcs.select(F.col("src").alias("id"), "t")
-        .unionByName(arcs.select(F.col("dst").alias("id"), "t"))
-        .groupBy("id")
-        .agg(F.sum("t").alias("t_out"))
-    )
-    flows = flows.join(t_out, "id", "left").select(
-        "id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out")
-    )
-
-    memb: DataFrame | None = None
+    arcs, flows, m = _flow_graph(base_edges)
+    memb = None
     history = []
-    levels = 0
-    cur_arcs, cur_flows = arcs, flows
-    for level in range(max_levels):
-        m_arcs = cur_arcs.count()
-        if m_arcs == 0:
-            break
-        if m_arcs <= local_threshold:
-            pairs = [(r.src, r.dst, r.t) for r in cur_arcs.collect()]
-            p = {r.id: r.p for r in cur_flows.collect()}
-            comm = _local_infomap(pairs, p, eps=eps)
-            lvl = spark.createDataFrame(
-                [(int(u), int(c)) for u, c in comm.items()], "id long, comm long"
-            )
-            memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-            levels += 1
-            history.append({"level": level, "arcs": m_arcs, "mode": "local"})
-            break
-        lvl = _distributed_level(cur_arcs, cur_flows, eps, max_sweeps,
-                                 move_floor, ledger=ledger, level=level)
-        n_before = lvl.count()
-        n_after = lvl.select("comm").distinct().count()
-        memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-        memb = materialize_iter(memb)
-        levels += 1
-        history.append({"level": level, "arcs": m_arcs, "mode": "distributed",
-                        "n": n_before, "q": n_after})
-        if n_after == n_before:
-            break
-        # collapse flow graph: inter-community arcs only
-        # (src/FlowPartition.jl:207-252); p_c by sum, t_out recomputed
-        mm = lvl.select("id", "comm")
-        joined = (
-            cur_arcs.join(mm.select(F.col("id").alias("src"),
-                                    F.col("comm").alias("cs")), "src")
-            .join(mm.select(F.col("id").alias("dst"),
-                            F.col("comm").alias("cd")), "dst")
-            .filter(F.col("cs") != F.col("cd"))
-        )
-        cur_arcs = materialize_iter(
-            joined.select(
-                F.least("cs", "cd").alias("src"),
-                F.greatest("cs", "cd").alias("dst"),
-                "t",
-            )
-            .groupBy("src", "dst")
-            .agg(F.sum("t").alias("t"))
-        )
-        p_c = (
-            cur_flows.join(mm, "id")
-            .groupBy(F.col("comm").alias("id"))
-            .agg(F.sum("p").alias("p"))
-        )
-        t_out_c = (
-            cur_arcs.select(F.col("src").alias("id"), "t")
-            .unionByName(cur_arcs.select(F.col("dst").alias("id"), "t"))
-            .groupBy("id")
-            .agg(F.sum("t").alias("t_out"))
-        )
-        cur_flows = p_c.join(t_out_c, "id", "left").select(
-            "id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out")
-        )
-
+    if m > 0:
+        memb, history = optimize_levels(
+            (arcs, flows),
+            lambda arcs, flows: _local_infomap(
+                [(r.src, r.dst, r.t) for r in arcs.collect()],
+                {r.id: r.p for r in flows.collect()}, eps=eps),
+            lambda arcs, flows, level: _distributed_level(
+                arcs, flows, eps, max_sweeps, move_floor, ledger=ledger,
+                level=level),
+            lambda arcs, flows, lvl, info: _collapse_flows(arcs, flows, lvl),
+            local_threshold, max_levels, ledger=ledger)
     if memb is None:
         memb = vertices_of(base_edges).select("id", F.col("id").alias("comm"))
     memb = renumber_communities(memb)
-    return InfomapResult(memb, map_equation(base_edges, memb), levels, history)
+    codelength = map_equation(base_edges, memb) if m > 0 else 0.0
+    return InfomapResult(memb, codelength, len(history), history)
 
 
 # ======================================================================
@@ -507,13 +437,8 @@ def _local_infomap_directed(arcs, nodes, tau, n_total, eps=1e-12, max_sweeps=100
             out_cu2 + frac_cu2 * (ciso[cu] - iso[u]))
         q_c2 = tau * frac_c2 * (cp[c] + p[u]) + (1 - tau) * (
             out_c2 + frac_c2 * (ciso[c] + iso[u]))
-        sq2 = sum_q + (q_cu2 - q_c[cu]) + (q_c2 - q_c[c])
-        dl = (
-            _plogp(sq2) - _plogp(sum_q)
-            - 2.0 * (_plogp(q_cu2) + _plogp(q_c2) - _plogp(q_c[cu]) - _plogp(q_c[c]))
-            + _plogp(q_cu2 + cp[cu] - p[u]) + _plogp(q_c2 + cp[c] + p[u])
-            - _plogp(q_c[cu] + cp[cu]) - _plogp(q_c[c] + cp[c])
-        )
+        dl = _delta_l(_plogp, sum_q, _plogp(sum_q), q_c[cu], q_c[c], q_cu2, q_c2,
+                      cp[cu], cp[c], p[u])
         return dl, q_cu2, q_c2, out_cu2, out_c2
 
     improved_any = True
@@ -639,33 +564,35 @@ def _infomap_dir_sweep(arcs: DataFrame, nodes: DataFrame, memb: DataFrame,
                     F.col("p_cu") - F.col("p"), F.col("i_cu") - F.col("iso"), out_cu2)
     q_cn2 = _dq_dir(tau, n_total, F.col("n_cn") + F.col("nsize"),
                     F.col("p_cn") + F.col("p"), F.col("i_cn") + F.col("iso"), out_cn2)
-    sum_q2 = F.lit(sum_q) + (q_cu2 - F.col("q_cu")) + (q_cn2 - F.col("q_cn"))
-    dl = (
-        plogp(sum_q2) - F.lit(_plogp(sum_q))
-        - 2.0 * (plogp(q_cu2) + plogp(q_cn2)
-                 - plogp(F.col("q_cu")) - plogp(F.col("q_cn")))
-        + plogp(q_cu2 + F.col("p_cu") - F.col("p"))
-        + plogp(q_cn2 + F.col("p_cn") + F.col("p"))
-        - plogp(F.col("q_cu") + F.col("p_cu"))
-        - plogp(F.col("q_cn") + F.col("p_cn"))
+    dl = _delta_l(plogp, F.lit(sum_q), F.lit(_plogp(sum_q)), F.col("q_cu"),
+                  F.col("q_cn"), q_cu2, q_cn2, F.col("p_cu"), F.col("p_cn"),
+                  F.col("p"))
+    return _moves(mm, cand, dl, eps, move_parity() == F.lit(parity))
+
+
+def _collapse_dir(arcs: DataFrame, nodes: DataFrame, memb: DataFrame,
+                  info: dict) -> tuple[DataFrame, DataFrame]:
+    """Collapse the directed flow graph by ``memb``
+    (src/DiFlowPartition.jl:321-363): inter-community flows summed per
+    ordered community pair; node masses (p, iso, size) summed, fout
+    recomputed from the collapsed arcs."""
+    mm = memb.select("id", "comm")
+    coarse = materialize_iter(
+        arcs.join(mm.select(F.col("id").alias("src"), F.col("comm").alias("cs")), "src")
+        .join(mm.select(F.col("id").alias("dst"), F.col("comm").alias("cd")), "dst")
+        .filter(F.col("cs") != F.col("cd"))
+        .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
+        .agg(F.sum("f").alias("f"))
     )
-    best = (
-        cand.withColumn("dl", dl)
-        .groupBy("id")
-        .agg(
-            F.min_by("cand", F.struct(F.col("dl"), F.col("cand"))).alias("best_c"),
-            F.min("dl").alias("best_dl"),
-        )
-    )
-    new_c = (
-        F.when(
-            (F.col("best_dl") < -eps)
-            & (F.pmod(F.xxhash64("id"), F.lit(2)) == F.lit(parity)),
-            F.col("best_c"),
-        ).otherwise(F.col("c"))
-    )
-    return mm.join(best, "id", "left").select(
-        "id", new_c.alias("comm"), (new_c != F.col("c")).alias("moved")
+    fo = coarse.groupBy(F.col("src").alias("id")).agg(F.sum("f").alias("fout"))
+    return coarse, materialize_iter(
+        nodes.join(mm, "id")
+        .groupBy(F.col("comm").alias("id"))
+        .agg(F.sum("p").alias("p"), F.sum("iso").alias("iso"),
+             F.sum("nsize").alias("nsize"))
+        .join(fo, "id", "left")
+        .select("id", "p", "iso", "nsize",
+                F.coalesce("fout", F.lit(0.0)).alias("fout"))
     )
 
 
@@ -720,89 +647,27 @@ def infomap_directed(
         )
     )
 
-    memb: DataFrame | None = None
-    history = []
-    levels = 0
-    cur_arcs, cur_nodes = arcs, nodes
-    for level in range(max_levels):
-        m_arcs = cur_arcs.count()
-        if m_arcs == 0 and memb is not None:
-            break
-        if m_arcs <= local_threshold:
-            pairs = [(r.src, r.dst, r.f) for r in cur_arcs.collect()]
-            nd = {r.id: (r.p, r.iso, r.nsize) for r in cur_nodes.collect()}
-            comm = _local_infomap_directed(pairs, nd, tau, n_total, eps=eps)
-            lvl = spark.createDataFrame(
-                [(int(u), int(c)) for u, c in comm.items()], "id long, comm long"
-            )
-            memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-            levels += 1
-            history.append({"level": level, "arcs": m_arcs, "mode": "local"})
-            break
-        # distributed sweeps on this level
-        from ..plans.iterstate import StateLoop, no_aqe
+    def level(arcs, nodes, level_no):
+        def setup(loop, n):
+            nd = loop.side(nodes.repartition(loop.parts, "id"), "id")
+            return lambda memb, parity: _infomap_dir_sweep(
+                arcs, nd, memb, tau, n_total, parity, eps)
 
-        loop = StateLoop(spark, f"infomap_d_l{level}", bucket_key="id")
-        lvl = loop.init(vertices_of(cur_arcs).unionByName(cur_nodes.select("id"))
-                        .distinct().select("id", F.col("id").alias("comm")))
-        n_lvl = lvl.count()
-        cur_nodes = cur_nodes.persist()
-        cur_nodes.count()
-        low_streak = 0
-        with no_aqe(spark):
-            for sweep in range(max_sweeps):
-                lvl, got = loop.step(
-                    _infomap_dir_sweep(cur_arcs, cur_nodes,
-                                       lvl.select("id", "comm"),
-                                       tau, n_total, sweep % 2, eps),
-                    {"moved": F.sum(F.col("moved").cast("long"))},
-                    write_cols=["id", "comm"],
-                )
-                moved = int(got.get("moved") or 0)
-                if ledger is not None:
-                    ledger.record(sweep, {"level": level, "moved": moved})
-                if moved <= move_floor * n_lvl:
-                    low_streak += 1
-                    if low_streak >= 2:
-                        break
-                else:
-                    low_streak = 0
-        cur_nodes.unpersist()
-        loop.cleanup(keep_final=True)
-        lvl = lvl.select("id", "comm")
-        n_before, n_after = n_lvl, lvl.select("comm").distinct().count()
-        memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-        memb = materialize_iter(memb)
-        levels += 1
-        history.append({"level": level, "arcs": m_arcs, "mode": "distributed",
-                        "n": n_before, "q": n_after})
-        if n_after == n_before:
-            break
-        mm = lvl
-        cur_arcs = materialize_iter(
-            cur_arcs.join(mm.select(F.col("id").alias("src"),
-                                    F.col("comm").alias("cs")), "src")
-            .join(mm.select(F.col("id").alias("dst"),
-                            F.col("comm").alias("cd")), "dst")
-            .filter(F.col("cs") != F.col("cd"))
-            .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
-            .agg(F.sum("f").alias("f"))
-        )
-        fo = cur_arcs.groupBy(F.col("src").alias("id")).agg(F.sum("f").alias("fout"))
-        cur_nodes = materialize_iter(
-            cur_nodes.join(mm, "id")
-            .groupBy(F.col("comm").alias("id"))
-            .agg(F.sum("p").alias("p"), F.sum("iso").alias("iso"),
-                 F.sum("nsize").alias("nsize"))
-            .join(fo, "id", "left")
-            .select("id", "p", "iso", "nsize",
-                    F.coalesce("fout", F.lit(0.0)).alias("fout"))
-        )
+        return sweep_level(nodes.select("id"), arcs.count(), setup,
+                           "infomap_d", level_no, max_sweeps, move_floor,
+                           ledger=ledger)
 
+    memb, history = optimize_levels(
+        (arcs, nodes),
+        lambda arcs, nodes: _local_infomap_directed(
+            [(r.src, r.dst, r.f) for r in arcs.collect()],
+            {r.id: (r.p, r.iso, r.nsize) for r in nodes.collect()},
+            tau, n_total, eps=eps),
+        level, _collapse_dir, local_threshold, max_levels, ledger=ledger)
     if memb is None:
         memb = verts.select("id", F.col("id").alias("comm"))
     memb = renumber_communities(memb)
     from .objectives import map_equation_directed
 
     codelen = map_equation_directed(base_edges, memb, tau=tau, pr_tol=pr_tol)
-    return InfomapResult(memb, codelen, levels, history)
+    return InfomapResult(memb, codelen, len(history), history)

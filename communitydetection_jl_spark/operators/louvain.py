@@ -26,8 +26,9 @@ apply non-conflicting ones. This engine adopts that discipline:
     test/runtests.jl:16).
 
 Scale: each sweep is one join + two groupBys; comm totals are a
-broadcast-sized table after the first collapse; lineage truncated by
-localCheckpoint per sweep.
+broadcast-sized table after the first collapse. The sweep loop, the
+level loop and the StateLoop that writes each sweep's membership to
+parquet (plans/iterstate.py) are coarsen.py's, shared with Infomap.
 """
 
 from __future__ import annotations
@@ -44,14 +45,46 @@ from ..functions.graph import (
     vertices_of,
     with_weight,
 )
-from .coarsen import collapse_graph, from_coarser_partition, renumber_communities
+from .coarsen import (
+    collapse_graph,
+    from_coarser_partition,
+    move_parity,
+    optimize_levels,
+    recurse_local,
+    renumber_communities,
+    sweep_level,
+)
 from .modularity import modularity
+from .objectives import (
+    _kl_expr,
+    cpm_quality,
+    rber_quality,
+    significance_quality,
+    surprise_quality,
+)
 
 
 # ----------------------------------------------------------------------
 # driver-local exact greedy (reference move_nodes!/optimize_partition!
 # semantics with deterministic order), used below local_threshold
 # ----------------------------------------------------------------------
+
+def _adjacency(pairs):
+    """(adj, selfw, nodes) of canonical (u, v, w) pairs, self-loop
+    weight kept apart from the neighbour maps."""
+    adj = defaultdict(dict)
+    selfw = defaultdict(float)
+    nodes = set()
+    for u, v, w in pairs:
+        nodes.add(u)
+        nodes.add(v)
+        if u == v:
+            selfw[u] += w
+        else:
+            adj[u][v] = adj[u].get(v, 0.0) + w
+            adj[v][u] = adj[v].get(u, 0.0) + w
+    return adj, selfw, nodes
+
 
 def _local_louvain(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
                    objective="modularity", gamma=1.0):
@@ -67,19 +100,8 @@ def _local_louvain(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
     Deterministic: vertices swept in sorted id order, ties broken by
     smallest community id. Returns dict id -> community id.
     """
-    adj = defaultdict(dict)
-    selfw = defaultdict(float)
-    nodes = set()
-    m = 0.0
-    for u, v, w in pairs:
-        nodes.add(u)
-        nodes.add(v)
-        m += w
-        if u == v:
-            selfw[u] += w
-        else:
-            adj[u][v] = adj[u].get(v, 0.0) + w
-            adj[v][u] = adj[v].get(u, 0.0) + w
+    adj, selfw, nodes = _adjacency(pairs)
+    m = sum(w for _, _, w in pairs)
     if m <= 0:
         return {u: u for u in nodes}
     k = {u: sum(adj[u].values()) + 2.0 * selfw[u] for u in nodes}
@@ -122,25 +144,10 @@ def _local_louvain(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
             if best_c != cu:
                 improved_any = True
 
-    # collapse and recurse while the community count shrinks
-    n_comms = len(set(comm.values()))
-    if n_comms < len(nodes):
-        agg = defaultdict(float)
-        csize = defaultdict(float)
-        for u in nodes:
-            csize[comm[u]] += (node_sizes or {}).get(u, 1.0)
-        for u, v, w in pairs:
-            a, b = comm[u], comm[v]
-            lo, hi = (a, b) if a <= b else (b, a)
-            agg[(lo, hi)] += w
-        coarse_pairs = [(a, b, w) for (a, b), w in agg.items()]
-        coarse_comm = _local_louvain(
-            coarse_pairs, node_sizes=dict(csize), eps=eps,
-            max_sweeps=max_sweeps, objective=objective, gamma=gamma,
-        )
-        if len(set(coarse_comm.values())) < n_comms:
-            comm = {u: coarse_comm[comm[u]] for u in comm}
-    return comm
+    return recurse_local(
+        pairs, nodes, comm, lambda u: (node_sizes or {}).get(u, 1.0),
+        lambda cp, cs: _local_louvain(cp, node_sizes=cs, eps=eps, max_sweeps=max_sweeps,
+                                      objective=objective, gamma=gamma))
 
 
 # ----------------------------------------------------------------------
@@ -160,6 +167,12 @@ def _kl(q, p):
     return out
 
 
+def _poss_c(x):
+    """C(x, 2): vertex pairs inside a community of x nodes (floats or
+    columns)."""
+    return x * (x - 1) / 2.0
+
+
 def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
                     objective="significance", density=None, n_total=None,
                     m_total=None):
@@ -171,17 +184,7 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
 
     Deterministic order (sorted ids, smallest-community tie-break);
     returns dict id -> community."""
-    adj = defaultdict(dict)
-    selfw = defaultdict(float)
-    nodes = set()
-    for u, v, w in pairs:
-        nodes.add(u)
-        nodes.add(v)
-        if u == v:
-            selfw[u] += w
-        else:
-            adj[u][v] = adj[u].get(v, 0.0) + w
-            adj[v][u] = adj[v].get(u, 0.0) + w
+    adj, selfw, nodes = _adjacency(pairs)
     ns = {u: float((node_sizes or {}).get(u, 1.0)) for u in nodes}
     comm = {u: u for u in nodes}
     cn = defaultdict(float)   # community total node size
@@ -194,12 +197,9 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
     poss = n * (n - 1) / 2.0
     p = density if density is not None else (m / poss if poss else 0.0)
 
-    def poss_c(x):
-        return x * (x - 1) / 2.0
-
     def sig_term(nc, mc):
         # mirrors objectives._kl_expr guards exactly (no clamping)
-        pc = poss_c(nc)
+        pc = _poss_c(nc)
         return pc * _kl(mc / pc, p) if pc > 0 else 0.0
 
     def surprise_val(m_in, poss_in):
@@ -208,7 +208,7 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
         return m * _kl(m_in / m, poss_in / poss)
 
     m_in = sum(cm.values())
-    poss_in = sum(poss_c(x) for x in cn.values())
+    poss_in = sum(_poss_c(x) for x in cn.values())
 
     order = sorted(nodes)
     improved_any = True
@@ -236,8 +236,8 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
                 else:  # surprise
                     m_in2 = m_in - w_to.get(cu, 0.0) + w_to.get(c, 0.0)
                     poss_in2 = (
-                        poss_in - poss_c(cn[cu]) + poss_c(cn[cu] - s)
-                        - poss_c(cn[c]) + poss_c(cn[c] + s)
+                        poss_in - _poss_c(cn[cu]) + _poss_c(cn[cu] - s)
+                        - _poss_c(cn[c]) + _poss_c(cn[c] + s)
                     )
                     gain = surprise_val(m_in2, poss_in2) - surprise_val(m_in, poss_in)
                 if gain > best_gain + eps or (
@@ -248,8 +248,8 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
             if best_c != cu:
                 m_in += -w_to.get(cu, 0.0) + w_to.get(best_c, 0.0)
                 poss_in += (
-                    -poss_c(cn[cu]) + poss_c(cn[cu] - s)
-                    - poss_c(cn[best_c]) + poss_c(cn[best_c] + s)
+                    -_poss_c(cn[cu]) + _poss_c(cn[cu] - s)
+                    - _poss_c(cn[best_c]) + _poss_c(cn[best_c] + s)
                 )
                 cn[cu] -= s
                 cm[cu] -= w_to.get(cu, 0.0) + sw
@@ -258,24 +258,11 @@ def _local_setbased(pairs, node_sizes=None, eps=1e-10, max_sweeps=100,
                 comm[u] = best_c
                 improved_any = True
 
-    n_comms = len(set(comm.values()))
-    if n_comms < len(nodes):
-        agg = defaultdict(float)
-        csize = defaultdict(float)
-        for u in nodes:
-            csize[comm[u]] += ns[u]
-        for u, v, w in pairs:
-            a, b = comm[u], comm[v]
-            lo, hi = (a, b) if a <= b else (b, a)
-            agg[(lo, hi)] += w
-        coarse = _local_setbased(
-            [(a, b, w) for (a, b), w in agg.items()],
-            node_sizes=dict(csize), eps=eps, max_sweeps=max_sweeps,
-            objective=objective, density=p, n_total=n, m_total=m,
-        )
-        if len(set(coarse.values())) < n_comms:
-            comm = {u: coarse[comm[u]] for u in comm}
-    return comm
+    return recurse_local(
+        pairs, nodes, comm, ns.__getitem__,
+        lambda cp, cs: _local_setbased(cp, node_sizes=cs, eps=eps, max_sweeps=max_sweeps,
+                                       objective=objective, density=p, n_total=n,
+                                       m_total=m))
 
 
 # ----------------------------------------------------------------------
@@ -291,6 +278,23 @@ def _strengths(edges: DataFrame) -> DataFrame:
     return per_end.groupBy("id").agg(F.sum("weight").alias("k"))
 
 
+def _w_to(sym: DataFrame, mm: DataFrame, pexpr, parity: int) -> DataFrame:
+    """(id, cand, w_uc): w(u → community of neighbor), gathered for
+    ACTIVE-parity listeners only — the LPA listener filter: inactive
+    vertices keep c regardless of their argmax, so scoring them is
+    discarded work; the filter halves the sweep's dominant shuffle and
+    is exact because a listener's candidate set depends only on its OWN
+    messages. Inactive rows ride through the sweep's final left join
+    with best=null → comm unchanged."""
+    return (
+        sym.select(F.col("src").alias("id"), "dst", "weight")
+        .filter(pexpr == F.lit(parity))
+        .join(mm.withColumnRenamed("id", "dst").withColumnRenamed("c", "nc"), "dst")
+        .groupBy("id", F.col("nc").alias("cand"))
+        .agg(F.sum("weight").alias("w_uc"))
+    )
+
+
 def _move_sweep(sym: DataFrame, memb: DataFrame, aux: DataFrame,
                 penalty: float, parity: int, eps: float,
                 parity_expr=None) -> DataFrame:
@@ -298,10 +302,10 @@ def _move_sweep(sym: DataFrame, memb: DataFrame, aux: DataFrame,
 
     ``sym`` is the level's SELF-LOOP-FREE symmetrized weighted view
     (src, dst, weight), materialized ONCE per level by
-    ``_distributed_level`` — bucketed on ``dst`` in tables mode so the
-    per-sweep membership join needs no exchange on the 2m-row side
-    (the LPA side-table discipline, operators/lpa.py:336; rebuilding
-    sym per sweep cost a full 2m-row exchange every sweep).
+    ``_distributed_level`` through ``StateLoop.side`` — bucketed on
+    ``dst`` in tables mode so the per-sweep membership join needs no
+    exchange on the 2m-row side (rebuilding sym per sweep cost a full
+    2m-row exchange every sweep).
 
     ``aux`` is (id, k2): per-vertex null-model mass (strength for
     modularity/RB-configuration, node size for CPM); the gain for u→c is
@@ -313,23 +317,8 @@ def _move_sweep(sym: DataFrame, memb: DataFrame, aux: DataFrame,
     reproducible (the driver's louvain_det row replays these bulk
     sweeps move set by move set in a recursive CTE)."""
     mm = memb.select("id", F.col("comm").alias("c"))
-    pexpr = parity_expr if parity_expr is not None else F.pmod(F.xxhash64("id"), F.lit(2))
-    # w(u → community of neighbor), gathered for ACTIVE-parity
-    # listeners only — the LPA listener filter (operators/lpa.py):
-    # inactive vertices keep c regardless of their argmax, so scoring
-    # them is discarded work; the filter halves the sweep's dominant
-    # shuffle (the w_to aggregation) and is exact because a listener's
-    # candidate set depends only on its OWN messages, which the filter
-    # never touches. Inactive rows ride through the final left join
-    # with best=null → comm unchanged.
-    listeners = sym.select(F.col("src").alias("id"), "dst", "weight")
-    listeners = listeners.filter(pexpr == F.lit(parity))
-    w_to = (
-        listeners.join(
-            mm.withColumnRenamed("id", "dst").withColumnRenamed("c", "nc"), "dst")
-        .groupBy("id", F.col("nc").alias("cand"))
-        .agg(F.sum("weight").alias("w_uc"))
-    )
+    pexpr = move_parity(parity_expr)
+    w_to = _w_to(sym, mm, pexpr, parity)
     tot = (
         mm.join(aux, "id")
         .groupBy(F.col("c").alias("cand"))
@@ -343,13 +332,10 @@ def _move_sweep(sym: DataFrame, memb: DataFrame, aux: DataFrame,
         .withColumn("score", F.col("w_uc") - F.lit(penalty) * F.col("k2") * F.col("tot_excl"))
     )
     # best foreign candidate AND the stay-put baseline in ONE
-    # aggregation pass: max_by skips rows whose ordering value is null
-    # (verified: all-own-community groups yield best_c = null, exactly
-    # the old filter+groupBy), and the conditional max over cand == c
-    # rows replaces what used to be a separate filter + an extra join
-    # against a `base` frame — two exchanges fewer per sweep, which at
-    # part-graph scale is most of a sweep's wall time (the sweeps are
-    # stage-count-bound, not data-bound, at 1.2M edges / 24 partitions)
+    # aggregation pass (max_by skips null ordering values, so an
+    # all-own-community group yields best_c = null): two exchanges
+    # fewer per sweep than a separate base join, most of a sweep's wall
+    # time at 1.2M edges / 24 partitions (stage-count-bound sweeps)
     foreign = F.when(
         F.col("cand") != F.col("c"),
         F.struct(F.col("score"), (-F.col("cand")).alias("nb")),
@@ -372,25 +358,14 @@ def _move_sweep(sym: DataFrame, memb: DataFrame, aux: DataFrame,
         .otherwise(F.col("c"))
     )
     moved = new_c != F.col("c")
-    upd = (
-        mm.join(best, "id", "left")
-        .select(
-            "id", new_c.alias("comm"), moved.alias("moved"),
-            # per-move objective gain (weight units): drives the
-            # diminishing-returns level stop (gain_floor)
-            F.when(
-                moved, F.col("best_score") - F.coalesce("base", F.lit(0.0))
-            ).otherwise(F.lit(0.0)).alias("gain"),
-        )
+    return mm.join(best, "id", "left").select(
+        "id", new_c.alias("comm"), moved.alias("moved"),
+        # per-move objective gain (weight units): drives the
+        # diminishing-returns level stop (gain_floor)
+        F.when(
+            moved, F.col("best_score") - F.coalesce("base", F.lit(0.0))
+        ).otherwise(F.lit(0.0)).alias("gain"),
     )
-    return upd
-
-
-def _kl_col(q, p):
-    """Binary KL as a column expression (objectives._kl_expr twin)."""
-    t1 = F.when((q > 0) & (p > 0), q * F.log(q / p)).otherwise(F.lit(0.0))
-    t2 = F.when((q < 1) & (p < 1), (1 - q) * F.log((1 - q) / (1 - p))).otherwise(F.lit(0.0))
-    return t1 + t2
 
 
 def _move_sweep_set(sym: DataFrame, selfw: DataFrame, memb: DataFrame,
@@ -413,19 +388,10 @@ def _move_sweep_set(sym: DataFrame, selfw: DataFrame, memb: DataFrame,
     inner-weight aggregation needs is exactly ``sym.filter(src < dst)``."""
     mm = memb.select("id", F.col("comm").alias("c"))
     e = sym.filter(F.col("src") < F.col("dst"))
-    pexpr = parity_expr if parity_expr is not None else F.pmod(F.xxhash64("id"), F.lit(2))
-    # active-parity listener filter (see _move_sweep): the community
-    # stats (node/inner_e/cstats/sc) read mm and e, NOT w_to, so
-    # restricting the candidate gather to the parity that may act is
-    # exact here too
-    listeners = sym.select(F.col("src").alias("id"), "dst", "weight")
-    listeners = listeners.filter(pexpr == F.lit(parity))
-    w_to = (
-        listeners.join(
-            mm.withColumnRenamed("id", "dst").withColumnRenamed("c", "nc"), "dst")
-        .groupBy("id", F.col("nc").alias("cand"))
-        .agg(F.sum("weight").alias("w_uc"))
-    )
+    pexpr = move_parity(parity_expr)
+    # the community stats (node/inner_e/cstats/sc) read mm and e, NOT
+    # w_to, so the active-parity listener filter is exact here too
+    w_to = _w_to(sym, mm, pexpr, parity)
     # per-community (total node size, inner weight incl. self-loops)
     node = mm.join(sizes, "id").join(selfw, "id", "left").select(
         "id", "c", F.col("nsize").alias("s"),
@@ -456,13 +422,10 @@ def _move_sweep_set(sym: DataFrame, selfw: DataFrame, memb: DataFrame,
     )
     P = F.lit(density)
 
-    def poss_c(x):
-        return x * (x - 1) / 2.0
-
     if objective == "significance":
         def sig(nc, mc):
-            pc = poss_c(nc)
-            return F.when(pc > 0, pc * _kl_col(mc / pc, P)).otherwise(F.lit(0.0))
+            pc = _poss_c(nc)
+            return F.when(pc > 0, pc * _kl_expr(mc / pc, P)).otherwise(F.lit(0.0))
 
         gain = (
             sig(F.col("cn_u") - F.col("s"),
@@ -480,20 +443,20 @@ def _move_sweep_set(sym: DataFrame, selfw: DataFrame, memb: DataFrame,
         # write is the only job; PageRank's dangling mass is the model)
         sc = cstats.agg(
             F.coalesce(F.sum("cm"), F.lit(0.0)).alias("_m_in"),
-            F.coalesce(F.sum(poss_c(F.col("cn"))), F.lit(0.0)).alias("_poss_in"),
+            F.coalesce(F.sum(_poss_c(F.col("cn"))), F.lit(0.0)).alias("_poss_in"),
         )
         cand = cand.crossJoin(F.broadcast(sc))
         poss = n_total * (n_total - 1) / 2.0
         M, PS = F.lit(m_total), F.lit(poss)
 
         def surp(mi, pi):
-            return F.when((M > 0) & (PS > 0), M * _kl_col(mi / M, pi / PS)).otherwise(F.lit(0.0))
+            return F.when((M > 0) & (PS > 0), M * _kl_expr(mi / M, pi / PS)).otherwise(F.lit(0.0))
 
         mi2 = F.col("_m_in") - F.col("w_ucur") + F.col("w_uc")
         pi2 = (
             F.col("_poss_in")
-            - poss_c(F.col("cn_u")) + poss_c(F.col("cn_u") - F.col("s"))
-            - poss_c(F.col("cn_c")) + poss_c(F.col("cn_c") + F.col("s"))
+            - _poss_c(F.col("cn_u")) + _poss_c(F.col("cn_u") - F.col("s"))
+            - _poss_c(F.col("cn_c")) + _poss_c(F.col("cn_c") + F.col("s"))
         )
         gain = surp(mi2, pi2) - surp(F.col("_m_in"), F.col("_poss_in"))
     best = (
@@ -530,38 +493,20 @@ def _distributed_level(edges: DataFrame, eps: float, max_sweeps: int,
                        base_scalars: dict | None = None,
                        parity_expr=None,
                        gain_floor: float | None = 1e-4,
-                       mode: str = "dir") -> DataFrame:
-    """Run bulk move sweeps on one level until (nearly) no vertex moves.
-
-    ``move_floor`` is the reference's δ move floor (src/Optimiser.jl:148):
-    stop once fewer than δ·n vertices move in a full parity pair —
-    residual moves are polished by later levels / the local phase.
-
-    Per sweep ONE action (plans/iterstate.py): the membership write
-    carries the moved-count as an observe() metric.
-
-    Returns (membership, info) where info carries the per-level
-    diagnostics the bench surfaces (sweep count, per-sweep seconds and
-    moved counts, summed gains, partition count) — the part_louvain
-    regression in round 3 was invisible without them.
+                       mode: str = "dir") -> tuple[DataFrame, dict]:
+    """One level of bulk move sweeps (coarsen.sweep_level) with the
+    objective's sweep plan. Returns (membership, info); info adds the
+    level's total edge weight ``m`` to sweep_level's diagnostics.
 
     ``gain_floor``: diminishing-returns stop, the distributed analogue
     of the reference's per-pass improvement threshold
     (src/Optimiser.jl:135-148): a sweep whose SUMMED move gain is
-    ≤ gain_floor·m (m = total edge weight; for modularity a sweep gain
-    of g raises Q by ≈ g/m) counts as quiet exactly like a sweep under
-    the move floor; two consecutive quiet sweeps (both parities) end
-    the level. This trims parity-oscillation tails (a few vertices
-    hopping back and forth, each hop "positive gain" in isolation)
-    without capping genuine slow convergence — measured on the
-    1.196M-edge part graph: 110.1s/Q=.085091 (off) → 80.8s/Q=.085072
-    (1e-4; the oscillating coarse level stops at sweep 10 of 30 while
-    the genuinely-improving level 0 runs its full 30; see
-    BENCH/BASELINE.md round-4 note). ``None`` disables (the
-    louvain_det oracle path pins the pure two-quiet-sweeps rule)."""
-    from ..plans.iterstate import StateLoop, no_aqe, shuffle_parts
-
-    spark = edges.sparkSession
+    ≤ gain_floor·m (for modularity a sweep gain of g raises Q by ≈ g/m)
+    is quiet. This trims parity-oscillation tails without capping
+    genuine slow convergence — on the 1.196M-edge part graph 110.1s /
+    Q=.085091 (off) → 80.8s / Q=.085072 (1e-4; BENCH/BASELINE.md
+    round-4 note). ``None`` disables it (the louvain_det oracle path
+    pins the pure two-quiet-sweeps rule)."""
     verts = vertices_of(edges)
     row = (
         with_weight(edges)
@@ -569,111 +514,48 @@ def _distributed_level(edges: DataFrame, eps: float, max_sweeps: int,
         .collect()[0]
     )
     m = float(row["m"] or 0.0)
-    # size the sweep's task granularity to the level's data: a 100k-edge
-    # level on 32 cores would otherwise run ~15 stages × 32 near-empty
-    # tasks per sweep — pure scheduling overhead (measured 126s → the
-    # whole point of partition-count ∝ data)
-    m_cnt = int(row["cnt"] or 0)
-    parts = max(4, min(spark.sparkContext.defaultParallelism, m_cnt // 50_000 + 1))
-    loop = StateLoop(spark, f"louvain_l{level}", mode=mode, bucket_key="id",
-                     parts=parts, ledger=None)
-    with shuffle_parts(spark, parts):
-        # ONE continuous override: init, aux materialization and every
-        # sweep must all run at `parts` or the persisted aux/memb land
-        # on an incompatible partitioning and each sweep pays an extra
-        # exchange re-aligning them
-        memb = loop.init(verts.select("id", F.col("id").alias("comm")))
-        n = memb.count()
-        # n and m ride back in info so the caller's level bookkeeping
-        # (vertex count, collapse weight-conservation check) needs no
-        # extra actions over frames this level already aggregated
-        info = {"parts": parts, "sweeps": 0, "sweep_seconds": [],
-                "sweep_moved": [], "sweep_gain": [], "n": n, "m": m}
-        if m <= 0:
-            loop.cleanup(keep_final=True)
-            return memb, info
-        setbased = objective in ("significance", "surprise")
-        if objective == "cpm":
-            aux = (node_sizes or verts.select("id", F.lit(1.0).alias("k2"))).select(
-                "id", F.col(node_sizes.columns[1] if node_sizes is not None else "k2").cast("double").alias("k2")
-            )
+    setbased = objective in ("significance", "surprise")
+    bs = base_scalars or {}
+
+    def setup(loop, n):
+        if objective == "cpm" or setbased:
+            ns = node_sizes if node_sizes is not None else verts.select(
+                "id", F.lit(1.0).alias("k2"))
+            aux = ns.select("id", F.col(ns.columns[1]).cast("double")
+                            .alias("nsize" if setbased else "k2"))
             penalty = gamma
-        elif setbased:
-            aux = (node_sizes or verts.select("id", F.lit(1.0).alias("k2"))).select(
-                "id", F.col(node_sizes.columns[1] if node_sizes is not None else "k2").cast("double").alias("nsize")
-            )
-            penalty = 0.0
         else:
             aux = _strengths(edges).select("id", F.col("k").alias("k2"))
             penalty = gamma / (2.0 * m)
-        aux = aux.persist()
-        aux.count()
-        # symmetrized self-loop-free weighted view, materialized ONCE
-        # per level (the per-sweep rebuild shuffled all 2m rows into the
-        # membership join EVERY sweep) as the loop's side relation:
-        # bucketed on dst in tables mode so that join is exchange-free
-        # on the 2m side for every sweep of the level
+        aux = loop.side(aux.repartition(loop.parts, "id"), "id")
+        # symmetrized self-loop-free weighted view, built ONCE per level
+        # as the loop's side relation (bucketed on dst in tables mode, so
+        # the per-sweep membership join is exchange-free on the 2m side)
         ew = with_weight(edges).select("src", "dst", "weight")
         enl = ew.filter(F.col("src") != F.col("dst"))
         sym = loop.side(enl.unionByName(
             enl.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
                        "weight")
-        ).repartition(parts, "dst"), "dst")
-        selfw = None
-        if setbased:
-            selfw = (
-                ew.filter(F.col("src") == F.col("dst"))
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("weight").alias("sw"))
-                .persist()
-            )
-            selfw.count()
-        bs = base_scalars or {}
-        low_streak = 0
-        with no_aqe(spark):
-            for sweep in range(max_sweeps):
-                if setbased:
-                    plan = _move_sweep_set(
-                        sym, selfw, memb.select("id", "comm"), aux,
-                        sweep % 2, eps,
-                        objective, bs.get("density", 0.0),
-                        bs.get("n_total", float(n)), bs.get("m_total", m),
-                        parity_expr=parity_expr)
-                else:
-                    plan = _move_sweep(sym, memb.select("id", "comm"), aux,
-                                       penalty, sweep % 2, eps,
-                                       parity_expr=parity_expr)
-                memb, got = loop.step(
-                    plan,
-                    {"moved": F.sum(F.col("moved").cast("long")),
-                     "gain": F.sum("gain")},
-                    write_cols=["id", "comm"],
-                )
-                moved = int(got.get("moved") or 0)
-                gain = float(got.get("gain") or 0.0)
-                info["sweeps"] = sweep + 1
-                info["sweep_moved"].append(moved)
-                info["sweep_gain"].append(round(gain, 6))
-                if ledger is not None:
-                    ledger.record(sweep, {"level": level, "moved": moved,
-                                          "gain": gain})
-                quiet = moved <= move_floor * n or (
-                    gain_floor is not None and gain <= gain_floor * m
-                )
-                if quiet:
-                    low_streak += 1
-                    if low_streak >= 2:  # both parities quiet
-                        break
-                else:
-                    low_streak = 0
-    info["sweep_seconds"] = [round(t, 3) for t in loop.timings]
-    aux.unpersist()
-    if selfw is not None:
-        selfw.unpersist()
-    # releases sym too, or multi-level runs pile up one 2m-row side
-    # relation per level
-    loop.cleanup(keep_final=True)
-    return memb.select("id", "comm"), info
+        ).repartition(loop.parts, "dst"), "dst")
+        if not setbased:
+            return lambda memb, parity: _move_sweep(
+                sym, memb, aux, penalty, parity, eps, parity_expr=parity_expr)
+        selfw = loop.side(
+            ew.filter(F.col("src") == F.col("dst"))
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.sum("weight").alias("sw"))
+            .repartition(loop.parts, "id"), "id")
+        return lambda memb, parity: _move_sweep_set(
+            sym, selfw, memb, aux, parity, eps, objective,
+            bs.get("density", 0.0), bs.get("n_total", float(n)),
+            bs.get("m_total", m), parity_expr=parity_expr)
+
+    memb, info = sweep_level(
+        verts, int(row["cnt"] or 0), setup, "louvain", level,
+        max_sweeps if m > 0 else 0, move_floor, gain_floor=gain_floor, m=m,
+        ledger=ledger, mode=mode)
+    info["m"] = m
+    return memb, info
 
 
 @dataclass
@@ -731,19 +613,11 @@ def louvain(
     their weights reset to 1; recomputing them from the collapse would
     optimize a different null model than the accept-gate rescoring
     (ref optimize-on-collapse keeps base totals, src/Optimiser.jl:135-144)."""
-    spark = edges.sparkSession
     base_edges = materialize_iter(canonicalize_undirected(edges))
     setbased = objective in ("significance", "surprise")
     if objective in ("rber", "significance", "surprise"):
         if base_scalars is None:
-            # base-graph scalars keep the null model's meaning through
-            # collapses (node sizes carry the pair counts)
-            e0 = base_edges.filter(F.col("src") != F.col("dst"))
-            m0 = float(e0.count())
-            n0 = float(vertices_of(base_edges).count())
-            poss0 = n0 * (n0 - 1) / 2.0
-            p0 = m0 / poss0 if poss0 else 0.0
-            base_scalars = {"density": p0, "n_total": n0, "m_total": m0}
+            base_scalars = _base_scalars(base_edges)
             # unweighted-count semantics: weights become edge counts
             base_edges = materialize_iter(
                 base_edges.select("src", "dst", F.lit(1.0).alias("weight")))
@@ -752,8 +626,6 @@ def louvain(
             objective, gamma = "cpm", gamma * base_scalars["density"]
     else:
         base_scalars = base_scalars or {}
-    cur_edges = base_edges
-    memb: DataFrame | None = None  # composed fine membership
     # per-level node sizes (CPM null model needs them through collapses;
     # find_partition passes carried sizes when re-optimizing a collapse)
     if init_sizes is not None:
@@ -761,86 +633,64 @@ def louvain(
             "id", F.col(init_sizes.columns[1]).cast("double").alias("nsize"))
     else:
         sizes = vertices_of(base_edges).select("id", F.lit(1.0).alias("nsize"))
-    history = []
-    levels = 0
 
     def _quality_of(mb: DataFrame) -> float:
         if objective == "significance":
-            from .objectives import significance_quality
             return significance_quality(base_edges, mb)
         if objective == "surprise":
-            from .objectives import surprise_quality
             return surprise_quality(base_edges, mb)
         if objective == "cpm":
-            from .objectives import cpm_quality
             return cpm_quality(base_edges, mb, gamma=gamma)
         return modularity(base_edges, mb)
-    for level in range(max_levels):
-        m_edges = cur_edges.count()
-        if m_edges == 0:
-            break
-        if m_edges <= local_threshold:
-            pairs = [(r.src, r.dst, r.weight) for r in cur_edges.collect()]
-            ns = (
-                {r.id: r.nsize for r in sizes.collect()}
-                if objective == "cpm" or setbased else None
-            )
-            if setbased:
-                comm = _local_setbased(
-                    pairs, node_sizes=ns, eps=eps, objective=objective,
-                    density=base_scalars["density"],
-                    n_total=base_scalars["n_total"],
-                    m_total=base_scalars["m_total"])
-            else:
-                comm = _local_louvain(pairs, node_sizes=ns, eps=eps,
-                                      objective=objective, gamma=gamma)
-            lvl = spark.createDataFrame(
-                [(int(u), int(c)) for u, c in comm.items()], "id long, comm long"
-            )
-            memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-            levels += 1
-            history.append({"level": level, "edges": m_edges, "mode": "local"})
-            break
-        lvl, lvl_info = _distributed_level(
+
+    def local(cur_edges, sizes):
+        pairs = [(r.src, r.dst, r.weight) for r in cur_edges.collect()]
+        ns = (
+            {r.id: r.nsize for r in sizes.collect()}
+            if objective == "cpm" or setbased else None
+        )
+        if setbased:
+            return _local_setbased(
+                pairs, node_sizes=ns, eps=eps, objective=objective,
+                density=base_scalars["density"],
+                n_total=base_scalars["n_total"],
+                m_total=base_scalars["m_total"])
+        return _local_louvain(pairs, node_sizes=ns, eps=eps,
+                              objective=objective, gamma=gamma)
+
+    def level(cur_edges, sizes, level_no):
+        return _distributed_level(
             cur_edges, eps, max_sweeps,
             move_floor=move_floor, gain_floor=gain_floor, ledger=ledger,
-            level=level, objective=objective, gamma=gamma,
+            level=level_no, objective=objective, gamma=gamma,
             node_sizes=sizes.withColumnRenamed("nsize", "k2"),
             base_scalars=base_scalars, mode=mode)
-        # vertex count is invariant across sweeps — the level already
-        # counted it at state init (rides back in lvl_info); only the
-        # surviving-community count needs a fresh action
-        n_before = lvl_info.pop("n")
-        lvl_m = lvl_info.pop("m")
-        n_after = lvl.select("comm").distinct().count()
-        memb = lvl if memb is None else from_coarser_partition(memb, lvl)
-        memb = materialize_iter(memb)  # truncate the level-join chain
-        levels += 1
-        entry = {"level": level, "edges": m_edges, "mode": "distributed",
-                 "n": n_before, "q": n_after, **lvl_info}
-        if record_quality:
-            # per-level objective value of the composed membership —
-            # the hlpa_record_Q / ledger analogue (src/hlpa.jl:202-257)
-            entry["Q"] = _quality_of(renumber_communities(memb))
-        history.append(entry)
-        if ledger is not None:
-            ledger.record(level, {k: v for k, v in entry.items() if k != "mode"})
-        if n_after == n_before:
-            break
-        cur_edges = materialize_iter(
-            collapse_graph(cur_edges, lvl, check_conservation=True,
-                           expected_weight=lvl_m)
-        )
-        sizes = (
-            sizes.join(lvl, "id")
-            .groupBy(F.col("comm").alias("id"))
-            .agg(F.sum("nsize").alias("nsize"))
+
+    def collapse(cur_edges, sizes, lvl, info):
+        return (
+            materialize_iter(collapse_graph(cur_edges, lvl, check_conservation=True,
+                                            expected_weight=info["m"])),
+            sizes.join(lvl, "id").groupBy(F.col("comm").alias("id"))
+            .agg(F.sum("nsize").alias("nsize")),
         )
 
+    memb, history = optimize_levels(
+        (base_edges, sizes), local, level, collapse, local_threshold,
+        max_levels, ledger=ledger, quality=_quality_of if record_quality else None)
     if memb is None:
         memb = vertices_of(base_edges).select("id", F.col("id").alias("comm"))
     memb = renumber_communities(memb)
-    return LouvainResult(memb, _quality_of(memb), levels, history)
+    return LouvainResult(memb, _quality_of(memb), len(history), history)
+
+
+def _base_scalars(base: DataFrame) -> dict:
+    """The BASE graph's {density, n_total, m_total} (canonical edge
+    table): the density-null objectives keep them through collapses,
+    where node sizes carry the pair counts and weights the edge counts."""
+    m0 = float(base.filter(F.col("src") != F.col("dst")).count())
+    n0 = float(vertices_of(base).count())
+    poss0 = n0 * (n0 - 1) / 2.0
+    return {"density": m0 / poss0 if poss0 else 0.0, "n_total": n0, "m_total": m0}
 
 
 def find_partition(
@@ -869,12 +719,7 @@ def find_partition(
         # sub-call would recompute density/n/m from the COARSE graph and
         # reset the count-carrying collapsed weights — optimizing a
         # different null model than the accept-gate rescoring below
-        e0 = base.filter(F.col("src") != F.col("dst"))
-        m0 = float(e0.count())
-        n0 = float(vertices_of(base).count())
-        poss0 = n0 * (n0 - 1) / 2.0
-        scalars = {"density": (m0 / poss0 if poss0 else 0.0),
-                   "n_total": n0, "m_total": m0}
+        scalars = _base_scalars(base)
         # count semantics for the collapse input (matches the base call)
         base = base.select("src", "dst", F.lit(1.0).alias("weight"))
     for _ in range(1, max_rounds):
@@ -901,15 +746,11 @@ def find_partition(
 
 def _score(edges: DataFrame, memb: DataFrame, objective: str, gamma: float) -> float:
     if objective == "significance":
-        from .objectives import significance_quality
         return significance_quality(edges, memb)
     if objective == "surprise":
-        from .objectives import surprise_quality
         return surprise_quality(edges, memb)
     if objective == "cpm":
-        from .objectives import cpm_quality
         return cpm_quality(canonicalize_undirected(edges), memb, gamma=gamma)
     if objective == "rber":
-        from .objectives import rber_quality
         return rber_quality(edges, memb, gamma=gamma)
     return modularity(canonicalize_undirected(edges), memb)

@@ -37,6 +37,7 @@ class RunLedger:
         self.dir = os.path.join(root, self.run_id)
         os.makedirs(self.dir, exist_ok=True)
         self._metrics_path = os.path.join(self.dir, "metrics.jsonl")
+        self._last: int | None = None  # newest iter; read on first append
         manifest_path = os.path.join(self.dir, "manifest.json")
         if manifest is not None and not os.path.exists(manifest_path):
             with open(manifest_path, "w") as f:
@@ -44,11 +45,36 @@ class RunLedger:
 
     # -- metrics -------------------------------------------------------
     def record(self, iteration: int, metrics: dict) -> None:
-        with open(self._metrics_path, "a") as f:
-            f.write(json.dumps({"iter": iteration, **metrics}) + "\n")
+        line = json.dumps({"iter": iteration, **metrics}) + "\n"
+        with open(self._metrics_path, "ab+") as f:
+            end = f.seek(0, os.SEEK_END)
+            if end:
+                f.seek(end - 1)
+                if f.read(1) != b"\n":
+                    # a run killed mid-write left a torn last line: end
+                    # it, so this record is a line of its own
+                    line = "\n" + line
+            f.write(line.encode())
+        if self._last is not None:
+            self._last = max(self._last, iteration)
+
+    def append(self, metrics: dict) -> None:
+        """Record ``metrics`` under the iteration after the newest one
+        recorded: multilevel runs number their sweeps across levels.
+        The file is read on the first append only."""
+        if self._last is None:
+            self._last = max((r["iter"] for r in self.metrics()), default=0)
+        self.record(self._last + 1, metrics)
 
     def metrics(self) -> list[dict]:
+        """The whole records; a line torn by a killed run is skipped."""
         if not os.path.exists(self._metrics_path):
             return []
+        out = []
         with open(self._metrics_path) as f:
-            return [json.loads(line) for line in f if line.strip()]
+            for line in f:
+                try:
+                    out.append(json.loads(line))
+                except ValueError:
+                    pass
+        return out

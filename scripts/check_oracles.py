@@ -60,7 +60,8 @@ def compare(name, spark_df, sql, con):
                     bad = g[c].astype(str) != w[c].astype(str)
                     ok = False
                     msgs.append(f"col {c}: {int(bad.sum())} string mismatches")
-    print(f"{'OK  ' if ok else 'FAIL'} {name} ({len(got)} rows)" + ("; ".join([""] + msgs)))
+    print(f"{'OK  ' if ok else 'FAIL'} {name} ({len(got)} rows)" + ("; ".join([""] + msgs)),
+          flush=True)
     return ok
 
 
@@ -82,16 +83,16 @@ def main():
         if name not in oracles:
             try:
                 n = fn(spark, sf_dir).count()
-                print(f"rows-only {name}: {n} rows")
+                print(f"rows-only {name}: {n} rows", flush=True)
             except Exception as e:  # noqa: BLE001
-                print(f"FAIL {name} (rows-only): {e}")
+                print(f"FAIL {name} (rows-only): {e}", flush=True)
                 failures.append(name)
             continue
         try:
             if not compare(name, fn(spark, sf_dir), oracles[name], con):
                 failures.append(name)
         except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: {type(e).__name__}: {str(e)[:300]}")
+            print(f"FAIL {name}: {type(e).__name__}: {str(e)[:300]}", flush=True)
             failures.append(name)
     print("\nFAILURES:", failures if failures else "none")
     return 1 if failures else 0

@@ -5,8 +5,8 @@ a 1.2M-edge / 20k-vertex graph at local[32] — pure per-sweep plan
 overhead, since the data is tiny. Each sweep used to rebuild the
 symmetrized weighted view from the level's edge parquet and shuffle it
 into the membership join, then run separate base/best passes.
-Materializing sym ONCE per level as a bucketed side table (the LPA
-trick, operators/lpa.py:336), gathering only the active parity's
+Materializing sym ONCE per level as a bucketed side table
+(StateLoop.side), gathering only the active parity's
 candidates, and fusing base+best into one aggregation brought the
 steady sweep to ~1.0s on this bed (10-sweep level 67.4s → 21.2s),
 with identical per-sweep move counts and community count.

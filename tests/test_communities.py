@@ -617,6 +617,31 @@ def test_louvain_gain_floor_stop(spark):
     assert nmi(on.membership, truth) == pytest.approx(1.0)
 
 
+def test_multilevel_ledger_one_record_per_sweep(spark, tmp_path):
+    """Louvain and Infomap share one sweep loop and one level loop: in
+    a RunLedger every sweep is one record with an iteration number that
+    increases across the whole run, tagged with its level (and sweep),
+    and each level summary follows its sweeps under the same counter."""
+    from communitydetection_jl_spark.operators.infomap import infomap
+    from communitydetection_jl_spark.plans.runner import RunLedger
+
+    edges, _ = fx.ring_of_cliques(spark)
+    for name, run in (("louvain", louvain), ("infomap", infomap)):
+        ledger = RunLedger(str(tmp_path), run_id=name)
+        res = run(edges, local_threshold=0, ledger=ledger)
+        recs = ledger.metrics()
+        iters = [r["iter"] for r in recs]
+        assert iters == sorted(set(iters)) and len(iters) > 1, (name, iters)
+        assert all("level" in r for r in recs), name
+        dist = [h for h in res.history if h["mode"] == "distributed"]
+        sweeps = [r for r in recs if "sweep" in r]
+        assert len(sweeps) == sum(h["sweeps"] for h in dist), name
+        assert [r["moved"] for r in sweeps] == [
+            x for h in dist for x in h["sweep_moved"]], name
+        assert [r["level"] for r in recs if "sweep" not in r] == [
+            h["level"] for h in dist], name
+
+
 def test_lpa_first_superstep_fastpath(spark):
     """The identity-init first superstep reduces to one min-neighbor
     aggregation when the symmetrized (listener, speaker) pairs are

@@ -284,6 +284,14 @@ def test_infomap_directed_distributed_path(spark):
     singles = _dir_codelength(DIR_ARCS, nodes, {u: u for u in nodes})
     assert res.codelength < singles
     assert res.membership.select("comm").distinct().count() < len(nodes)
+    # the shared sweep loop's per-level diagnostics, and its stop rule:
+    # two quiet sweeps (move floor 0.01·7 → no mover) or the cap
+    dist = [h for h in res.history if h["mode"] == "distributed"]
+    assert dist
+    for h in dist:
+        assert h["sweeps"] == len(h["sweep_moved"]) == len(h["sweep_seconds"])
+        assert h["parts"] >= 4 and h["n"] >= h["q"]
+        assert h["sweep_moved"][-2:] == [0, 0] or h["sweeps"] == 30
 
 
 def test_infomap_det_sweep_params(spark):
@@ -296,32 +304,17 @@ def test_infomap_det_sweep_params(spark):
     both recover the planted partition."""
     from pyspark.sql import functions as F
 
-    from communitydetection_jl_spark.functions.graph import (
-        canonicalize_undirected,
-        vertices_of,
-    )
+    from communitydetection_jl_spark.functions.graph import canonicalize_undirected
     from communitydetection_jl_spark.operators.infomap import (
         _distributed_level,
+        _flow_graph,
     )
 
     edges, truth = fx.ring_of_cliques(spark)
-    e = canonicalize_undirected(edges)
-    m = float(e.agg(F.sum("weight")).collect()[0][0])
-    arcs = e.filter(F.col("src") != F.col("dst")).select(
-        "src", "dst", (F.col("weight") / (2 * m)).alias("t"))
-    sym_w = e.select(F.col("src").alias("id"), "weight").unionByName(
-        e.select(F.col("dst").alias("id"), "weight"))
-    t_out = (
-        arcs.select(F.col("src").alias("id"), "t")
-        .unionByName(arcs.select(F.col("dst").alias("id"), "t"))
-        .groupBy("id").agg(F.sum("t").alias("t_out"))
-    )
-    flows = (
-        sym_w.groupBy("id").agg((F.sum("weight") / (2 * m)).alias("p"))
-        .join(t_out, "id", "left")
-        .select("id", "p", F.coalesce("t_out", F.lit(0.0)).alias("t_out"))
-    )
-    det = _distributed_level(
+    arcs, flows, _ = _flow_graph(canonicalize_undirected(edges))
+    det, info = _distributed_level(
         arcs, flows, eps=1e-6, max_sweeps=10, move_floor=0.0,
         parity_expr=F.pmod(F.col("id"), F.lit(2)), score_round=5)
+    assert info["sweeps"] == len(info["sweep_moved"])
+    assert info["sweep_moved"][-2:] == [0, 0] or info["sweeps"] == 10
     assert nmi(det.select("id", "comm"), truth) == pytest.approx(1.0)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -92,6 +94,25 @@ def test_pagerank_resume_from_checkpoint(spark, tmp_path, pages):
     b = {r.id: r.pagerank for r in resumed.ranks.collect()}
     for k in a:
         assert b[k] == pytest.approx(a[k], abs=1e-6)
+
+
+def test_resume_over_torn_metrics_line(spark, tmp_path, pages):
+    """A run killed mid-write leaves a torn last line in metrics.jsonl.
+    Reopening the ledger must not parse it: the resume continues from
+    the newest state, every later record is a whole line, and append
+    (the multilevel operators' numbering) counts past the last record."""
+    edges = restrict_to_corpus(extract_edges(pages), url_dim(latest_captures(pages)))
+    edges = edges.localCheckpoint(eager=True)
+    ledgerA = RunLedger(str(tmp_path / "runs"), run_id="torn")
+    pagerank(edges, tol=1e-9, max_iter=3, ledger=ledgerA)
+    with open(os.path.join(ledgerA.dir, "metrics.jsonl"), "a") as f:
+        f.write('{"iter": 4, "del')
+
+    ledgerB = RunLedger(str(tmp_path / "runs"), run_id="torn")
+    resumed = pagerank(edges, tol=1e-9, max_iter=5, ledger=ledgerB)
+    assert resumed.iterations == 5
+    ledgerB.append({"level": 0})
+    assert [m["iter"] for m in ledgerB.metrics()] == [1, 2, 3, 4, 5, 6]
 
 
 def test_lpa_resume_from_checkpoint(spark, tmp_path, pages):
